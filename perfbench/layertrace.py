@@ -170,9 +170,9 @@ class Tracer:
             for s in self.spans:
                 f.write(json.dumps(dataclasses.asdict(s)) + "\n")
 
-    def end_setup(self, setups: int) -> None:
-        """Keep the catalog DDL time per set-up, then drop the set-up spans."""
-        self.setup_ddl_s = self.self_times().get("catalog.ddl", (0.0, 0.0, 0))[0] / setups
+    def end_setup(self) -> None:
+        """Keep the set-up's catalog DDL time, then drop the set-up spans."""
+        self.setup_ddl_s = self.self_times().get("catalog.ddl", (0.0, 0.0, 0))[0]
         self.spans.clear()
 
     def begin_region(self) -> None:

@@ -96,7 +96,7 @@ def main() -> int:
         sys.executable, os.path.join(HERE, "worker.py"),
         "--workload", args.workload, "--seed", str(args.seed),
         "--seconds", str(args.seconds), "--trace", str(args.trace),
-        "--data", data, "--out", out, "--t0", repr(t_launch),
+        "--data", data, "--out", out,
     ]
     if args.trace:
         os.makedirs(os.path.join(WORK, "traces"), exist_ok=True)
@@ -107,6 +107,8 @@ def main() -> int:
     # a SIGTERM to this process still stops the worker (see finally below)
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     try:
+        # the worker's set-up time counts from here, after the inputs exist
+        cmd += ["--t0", repr(time.time())]
         proc = subprocess.Popen(
             cmd, cwd=run_dir, env=env, stdout=sys.stderr, start_new_session=True
         )

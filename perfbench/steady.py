@@ -1,7 +1,7 @@
 """Steadiness evidence: two sets of runs of one commit.
 
     python3 perfbench/steady.py --runs 10 [--workloads adhoc_sql ingest] \
-        [--trace-runs 2] [--out steady.json]
+        [--trace-runs 2]
 
 Run from the repository root. Every run is ``perfbench/run.py`` with its
 own seed (set ``k``, run ``i`` uses ``seed_base + k * runs + i``). For
@@ -9,6 +9,8 @@ each workload × end-to-end metric it prints, per set, the median, the
 quartiles (``statistics.quantiles(n=4)``) and their distance as a share
 of the median, and whether the second set's median is within the
 metric's bound of the first's in the direction that counts as worse.
+It exits with 1 unless every spread and every comparison is within its
+bound.
 With ``--trace-runs`` it also makes traced runs, prints their per-layer
 medians, and states the tracing overhead as the traced runs'
 statement geomean over the untraced one.
@@ -24,6 +26,7 @@ import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SETS = 2
 
 
 def run_once(workload: str, seed: int, seconds: int, trace: int) -> dict:
@@ -55,17 +58,15 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workloads", nargs="+", default=names, choices=names)
     ap.add_argument("--runs", type=int, default=10)
-    ap.add_argument("--sets", type=int, default=2)
     ap.add_argument("--seed-base", type=int, default=1000)
     ap.add_argument("--trace-runs", type=int, default=0)
-    ap.add_argument("--out")
     args = ap.parse_args()
     seconds = bench["run_seconds"]
 
     raw: dict = {}
     for w in args.workloads:
         sets = []
-        for k in range(args.sets):
+        for k in range(SETS):
             runs = []
             for i in range(args.runs):
                 seed = args.seed_base + k * args.runs + i
@@ -96,15 +97,13 @@ def main() -> int:
                 print(f"{w:10s} {name:15s} set {k}: median {med:.4g} "
                       f"q1 {q1:.4g} q3 {q3:.4g} spread {spread:.3f} "
                       f"(bound {bound}, {'within' if spread <= bound else 'OUTSIDE'})")
-                if name != "setup_s" and spread > bound:
-                    ok = False
-            for k in range(1, len(meds)):
-                change = (meds[k] - meds[0]) / meds[0]
-                worse = change if metric["better"] == "lower" else -change
-                agree = worse <= bound
-                ok &= agree
-                print(f"{w:10s} {name:15s} set {k} vs set 0: {change:+.3f} "
-                      f"({'agree' if agree else 'DISAGREE'})")
+                ok &= spread <= bound
+            change = (meds[1] - meds[0]) / meds[0]
+            worse = change if metric["better"] == "lower" else -change
+            agree = worse <= bound
+            ok &= agree
+            print(f"{w:10s} {name:15s} set 1 vs set 0: {change:+.3f} "
+                  f"({'agree' if agree else 'DISAGREE'})")
         traced = raw[w]["traced"]
         if traced:
             untraced = [
@@ -120,9 +119,6 @@ def main() -> int:
             print(f"{w:10s} per-layer medians: " + json.dumps(
                 {m: round(v, 4) for m, v in layer.items()}
             ))
-    if args.out:
-        with open(args.out, "w") as f:
-            json.dump(raw, f)
     return 0 if ok else 1
 
 
