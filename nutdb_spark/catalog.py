@@ -9,7 +9,11 @@ The dialect's DDL surface (SURVEY.md §2.1 S6-S15) maps to:
   (unsigned/serial/enum), PRIMARY KEY, ORDER BY, skip indexes, CHECK
   constraints, defaults, comments, nullability (dialect default is
   NON-nullable — the inverse of Spark), serial counters, and for views
-  the merge strategy + defining query (pickled AST)
+  the merge strategy + defining query. Every stored expression and
+  query is printed dialect SQL, parsed again when it is used.
+
+Every replacement or removal of a live catalog path goes through
+:func:`commit`.
 
 Correctness-enforced at INSERT time (the write path is the only gate a
 storage-less dialect has): arity, type coercion, non-null, CHECK
@@ -18,18 +22,19 @@ constraints, Enum membership, DEFAULT fill-in, Serial generation.
 
 from __future__ import annotations
 
-import base64
 import json
 import os
-import pickle
 import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as S
 
 from nutdb_spark.frontend import ast_nodes as A
+from nutdb_spark.frontend import printer
+from nutdb_spark.frontend.parser import Parser, parse
 
 # --- §1.3 type mapping ----------------------------------------------------
 
@@ -106,16 +111,117 @@ class CatalogError(ValueError):
     pass
 
 
-def _parquet_files(path: str) -> list[str]:
-    out = []
-    for root, _dirs, files in os.walk(path):
-        out += [
-            os.path.join(root, f) for f in files if f.endswith(".parquet")
-        ]
-    return out
+# --- one commit for every path swap ----------------------------------------
+
+_COMMIT = ".commit-"
+
+
+def _entry(parent: str, cid: str, role: str) -> str:
+    """A commit's own name in ``parent``: ``new`` (staged entries),
+    ``old`` (live entries moved aside) or ``plan`` (its journal).
+    Dot-prefixed, so Spark's file index skips it, and never ending in
+    ``.json``, so no listing takes it for a sidecar."""
+    return os.path.join(parent, f"{_COMMIT}{cid}-{role}")
+
+
+def _move(src: str, dst: str) -> None:
+    os.replace(src, dst)
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    elif os.path.lexists(path):
+        os.remove(path)
+
+
+def commit(parent: str, names: list[str], write=None) -> None:
+    """Replace or remove the entries ``names`` of directory ``parent``
+    as one unit. ``write(staged)`` writes the new contents of each
+    entry at ``staged/<name>``; an entry it does not write (every
+    entry when ``write`` is None) is removed. The steps:
+
+    1. ``write`` stages the new entries in ``.commit-<id>-new``;
+    2. the journal ``.commit-<id>-plan`` records each name and whether
+       it exists;
+    3. each live entry moves aside into ``.commit-<id>-old``;
+    4. each staged entry moves in;
+    5. the journal is deleted (the commit point), then the aside
+       copies and what is left of the staging directory.
+
+    If a step before the commit point raises, the completed steps are
+    undone in this process and the error propagates. A failure while
+    deleting after the commit point is not raised: the next
+    :func:`recover` drops the leftovers. ``Catalog`` runs ``recover``
+    over its root and each object directory when it opens, so what a
+    killed process leaves is rolled back (journal present) or dropped.
+
+    Out of scope: an INSERT moves its files into the live directory one
+    by one (an atomic append needs a file manifest); a streaming sink's
+    state outside a catalog is never swept; concurrent writers get
+    nothing beyond unique staging names, and a catalog opened while
+    another process commits into it rolls that commit back."""
+    cid = uuid.uuid4().hex
+    new, old, plan = (_entry(parent, cid, r) for r in ("new", "old", "plan"))
+    try:
+        os.makedirs(new)
+        if write is not None:
+            write(new)
+        _dump(plan, {n: os.path.lexists(os.path.join(parent, n)) for n in names})
+        os.makedirs(old)
+        for n in names:
+            if os.path.lexists(os.path.join(parent, n)):
+                _move(os.path.join(parent, n), os.path.join(old, n))
+        for n in names:
+            if os.path.lexists(os.path.join(new, n)):
+                _move(os.path.join(new, n), os.path.join(parent, n))
+        os.remove(plan)
+    except BaseException:
+        _finish(parent, cid)
+        raise
+    try:
+        _finish(parent, cid)
+    except OSError:
+        pass  # committed; recover() drops the leftovers
+
+
+def _finish(parent: str, cid: str) -> None:
+    """Roll commit ``cid`` back if its journal survives, then drop its
+    staged and aside entries."""
+    new, old, plan = (_entry(parent, cid, r) for r in ("new", "old", "plan"))
+    if os.path.exists(plan):
+        try:
+            with open(plan) as f:
+                entries = json.load(f)
+        except ValueError:
+            entries = {}  # the journal was cut short: nothing had moved
+        for name, existed in entries.items():
+            live, aside = os.path.join(parent, name), os.path.join(old, name)
+            if os.path.lexists(aside):
+                _remove(live)
+                _move(aside, live)
+            elif not existed and not os.path.lexists(os.path.join(new, name)):
+                _remove(live)  # moved in where nothing stood
+        os.remove(plan)
+    _remove(old)
+    _remove(new)
+
+
+def recover(parent: str) -> None:
+    """Finish every commit a killed process left in ``parent``."""
+    cids = {
+        f[len(_COMMIT):].split("-", 1)[0]
+        for f in os.listdir(parent)
+        if f.startswith(_COMMIT)
+    }
+    for cid in cids:
+        _finish(parent, cid)
 
 
 # --- incremental-view eligibility (S7) ------------------------------------
+
+# buckets of an incrementally maintained view's state (streaming/summing.py)
+_VIEW_BUCKETS = 16
 
 
 def _unionall_branches(q) -> list | None:
@@ -150,25 +256,20 @@ def _has_subquery(node) -> bool:
     """Any subquery construct inside an expression tree (their value
     depends on whole-table state, so a per-insert delta through them
     would be silently wrong)."""
-    if isinstance(
-        node, (A.ScalarSubquery, A.Exists, A.InSubquery, A.QuantCompare)
-    ):
-        return True
-    for f in getattr(node, "__dataclass_fields__", {}):
-        v = getattr(node, f, None)
-        if isinstance(v, list):
-            for x in v:
-                if isinstance(x, tuple):
-                    if any(
-                        hasattr(y, "__dataclass_fields__") and _has_subquery(y)
-                        for y in x
-                    ):
-                        return True
-                elif hasattr(x, "__dataclass_fields__") and _has_subquery(x):
-                    return True
-        elif hasattr(v, "__dataclass_fields__") and _has_subquery(v):
-            return True
-    return False
+    subqueries = (A.ScalarSubquery, A.Exists, A.InSubquery, A.QuantCompare)
+    return any(isinstance(n, subqueries) for n in _walk_ast(node))
+
+
+def _table_refs(node):
+    """Every TableRef in a query tree."""
+    if isinstance(node, A.TableRef):
+        yield node
+    elif isinstance(node, (list, tuple)):
+        for x in node:
+            yield from _table_refs(x)
+    else:
+        for f in getattr(node, "__dataclass_fields__", {}):
+            yield from _table_refs(getattr(node, f))
 
 
 def _branch_delta_ok(b) -> bool:
@@ -233,6 +334,11 @@ class Catalog:
             tempfile.gettempdir(), "nutdb_catalog"
         )
         os.makedirs(self.root, exist_ok=True)
+        recover(self.root)
+        for f in os.listdir(self.root):
+            path = os.path.join(self.root, f)
+            if not f.startswith(".") and os.path.isdir(path):
+                recover(path)
 
     # --- metadata plumbing ------------------------------------------------
 
@@ -250,8 +356,38 @@ class Catalog:
             return json.load(f)
 
     def _save_meta(self, name: str, meta: dict) -> None:
-        with open(self._meta_path(name), "w") as f:
-            json.dump(meta, f, indent=1)
+        """Write a sibling, then move it over the sidecar: a failed
+        write leaves the previous sidecar in place."""
+        tmp = _entry(self.root, uuid.uuid4().hex, "new")
+        try:
+            _dump(tmp, meta)
+            os.replace(tmp, self._meta_path(name))
+        except BaseException:
+            _remove(tmp)
+            raise
+
+    def objects(self):
+        """Every catalog object's sidecar, in name order."""
+        for f in sorted(os.listdir(self.root)):
+            if f.endswith(".json") and not f.startswith("."):
+                meta = self._load_meta(f[:-5])
+                if meta:
+                    yield meta
+
+    def view_query(self, meta: dict):
+        """The parsed defining query of a view. A view whose stored
+        query does not parse raises on every read; maintenance and the
+        projection rewrite pass it over, so it blocks no other object."""
+        try:
+            stmt = parse(meta["query"])
+            if not isinstance(stmt, A.SelectStmt):
+                raise ValueError("not a query")
+        except ValueError as e:
+            raise CatalogError(
+                f"view {meta['name']!r}: stored query does not parse "
+                f"({e}); drop and recreate the view"
+            ) from None
+        return stmt.query
 
     def has_table(self, name: str) -> bool:
         m = self._load_meta(name)
@@ -264,25 +400,18 @@ class Catalog:
     # --- CREATE TABLE (S6) ------------------------------------------------
 
     def create_table(self, d: A.TableDefinition, low=None) -> None:
-        existing = self._load_meta(d.name)
-        replace_entity: str | None = None
-        if existing is not None:
+        if self._load_meta(d.name) is not None:
             if d.if_not_exists:
                 return
-            if getattr(d, "or_replace", False):
-                # [EXT] CREATE OR REPLACE TABLE. For CTAS the drop is
-                # DEFERRED until the new data is staged — dropping
-                # first would destroy the source of a self-referencing
-                # `CREATE OR REPLACE TABLE t AS SELECT ... FROM t` and
-                # leave nothing behind if the query fails.
-                replace_entity = existing["type"]
-            else:
+            if not getattr(d, "or_replace", False):
                 raise CatalogError(f"table {d.name!r} already exists")
+            # [EXT] CREATE OR REPLACE TABLE: the new table is committed
+            # over the old object only once it is staged, so a
+            # self-referencing `CREATE OR REPLACE TABLE t AS SELECT ...
+            # FROM t` reads the old data and a failure leaves it intact.
         if getattr(d, "as_query", None) is not None:
-            self._create_table_as(d, low, replace_entity=replace_entity)
+            self._create_table_as(d, low)
             return
-        if replace_entity is not None:
-            self.drop(A.DropStmt(replace_entity, d.name, True))
         meta = {
             "type": "table",
             "name": d.name,
@@ -293,7 +422,7 @@ class Catalog:
                     "spark_type": to_spark_type(c.dtype).json(),
                     "nullable": c.dtype.nullable,
                     "serial": c.dtype.name in _SERIAL_TYPES,
-                    "default": _pickle_ast(c.default) if c.default else None,
+                    "default": _sql(c.default),
                     "comment": c.comment,
                     "max_len": (
                         c.dtype.args[0]
@@ -305,13 +434,10 @@ class Catalog:
             ],
             "primary_key": d.primary_key,
             "order_by": d.order_by,
-            "partition_by": _pickle_ast(d.partition_by) if d.partition_by else None,
-            "indexes": [
-                {"name": i.name, "fn": i.fn.name, "args": _pickle_ast(i.fn.args)}
-                for i in d.indexes
-            ],
+            "partition_by": _sql(d.partition_by),
+            "indexes": [_index_meta(i) for i in d.indexes],
             "constraints": [
-                {"name": c.name, "check": _pickle_ast(c.check)}
+                {"name": c.name, "check": printer.expr(c.check)}
                 for c in d.constraints
             ],
             "comment": d.comment,
@@ -319,12 +445,14 @@ class Catalog:
                 c.name: 1 for c in d.columns if c.dtype.name in _SERIAL_TYPES
             },
         }
-        self._save_meta(d.name, meta)
-        os.makedirs(self._data_path(d.name), exist_ok=True)
 
-    def _create_table_as(
-        self, d: A.TableDefinition, low, replace_entity: str | None = None
-    ) -> None:
+        def write(staged: str) -> None:
+            os.makedirs(os.path.join(staged, d.name))
+            _dump(os.path.join(staged, d.name + ".json"), meta)
+
+        commit(self.root, [d.name, d.name + ".json"], write)
+
+    def _create_table_as(self, d: A.TableDefinition, low) -> None:
         """[EXT] CREATE TABLE ... AS SELECT: the schema is the query's
         output schema; data is written through the same
         partition/order-aware parquet path as INSERT. The write is the
@@ -332,12 +460,12 @@ class Catalog:
         driver. An ENGINE clause is recorded for ClickHouse parity but
         storage is always parquet + JSON sidecar.
 
-        Atomicity: the query writes to a tmp dir FIRST, then the
-        sidecar metadata is saved and the directory swapped into place
-        — a failed CTAS never leaves a registered table with partial
-        data, and OR REPLACE drops the old table only after the new
-        data is fully staged (so a self-referencing query reads the old
-        data while it runs)."""
+        Atomicity: the query writes the staged data directory and the
+        staged sidecar, then :func:`commit` swaps both in as one unit —
+        a failed CTAS never leaves a registered table with partial
+        data, and OR REPLACE moves the old table aside only after the
+        new data is fully staged (so a self-referencing query reads the
+        old data while it runs)."""
         if low is None:
             raise CatalogError("CTAS requires a query lowerer")
         df = low.lower_query(d.as_query)
@@ -362,9 +490,7 @@ class Catalog:
             ],
             "primary_key": d.primary_key,
             "order_by": d.order_by,
-            "partition_by": (
-                _pickle_ast(d.partition_by) if d.partition_by else None
-            ),
+            "partition_by": _sql(d.partition_by),
             "indexes": [],
             "constraints": [],
             "comment": d.comment,
@@ -374,51 +500,31 @@ class Catalog:
         for c in d.order_by or []:
             if c not in df.columns:
                 raise CatalogError(f"ORDER BY column {c!r} not in CTAS output")
-        path = self._data_path(d.name)
-        tmp = path + ".tmp"
-        staged = df
+
+        def write(staged: str) -> None:
+            # the query executes HERE, against the pre-swap catalog state
+            self._write_table(df, os.path.join(staged, d.name), meta, low)
+            _dump(os.path.join(staged, d.name + ".json"), meta)
+
+        commit(self.root, [d.name, d.name + ".json"], write)
+
+    def _write_table(self, df: DataFrame, path: str, meta: dict, low) -> None:
+        """Write ``df`` at ``path`` in the table's declared layout:
+        PARTITION BY directories, ORDER BY clustering."""
         part_cols: list[str] = []
-        if d.partition_by is not None:
-            if isinstance(d.partition_by, A.Ident):
-                part_cols = [d.partition_by.name]
+        if meta["partition_by"]:
+            pe = Parser(meta["partition_by"]).parse_expr()
+            if isinstance(pe, A.Ident):
+                part_cols = [pe.name]
             else:
-                staged = staged.withColumn(
-                    "__part", low._expr(d.partition_by, None, {}, [])
-                )
+                df = df.withColumn("__part", low._expr(pe, None, {}, []))
                 part_cols = ["__part"]
-        if d.order_by:
-            staged = staged.sortWithinPartitions(*d.order_by)
-        writer = staged.write.mode("overwrite")
+        if meta["order_by"]:
+            df = df.sortWithinPartitions(*meta["order_by"])
+        writer = df.write.mode("overwrite")
         if part_cols:
             writer = writer.partitionBy(*part_cols)
-        # the query executes HERE, against the pre-drop catalog state;
-        # a failed write must not orphan the staging dir
-        try:
-            writer.parquet(tmp)
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        # true swap (OR REPLACE): rename the OLD data aside, rename the
-        # new data in, THEN delete the old — at no instant is the table
-        # name without a data directory, and a crash mid-swap leaves
-        # either the old table intact (before the rename-in) or the new
-        # one fully in place (after). Metadata is saved only after the
-        # new directory exists, so a registered table always has data.
-        old = path + ".old"
-        had_old = os.path.exists(path)
-        if had_old:
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(path, old)
-        try:
-            os.rename(tmp, path)
-        except Exception:
-            if had_old:
-                os.rename(old, path)  # roll the old table back in
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        self._save_meta(d.name, meta)
-        if had_old:
-            shutil.rmtree(old, ignore_errors=True)
+        writer.parquet(path)
 
     def _schema(self, meta: dict) -> S.StructType:
         return S.StructType(
@@ -573,9 +679,9 @@ class Catalog:
                 col = (F.lit(base) + dense_idx).cast(stype)
                 serial_bases[name] = base + n_rows
             elif c["default"] is not None:
-                col = low._expr(_unpickle_ast(c["default"]), None, {}, []).cast(
-                    stype
-                )
+                col = low._expr(
+                    Parser(c["default"]).parse_expr(), None, {}, []
+                ).cast(stype)
             else:
                 col = F.lit(None).cast(stype)
             out_cols.append(col.alias(name))
@@ -602,32 +708,16 @@ class Catalog:
                     for i, (cond, _) in enumerate(violations)
                 ],
             )
-        part_cols: list[str] = []
-        if meta["partition_by"]:
-            part_expr = _unpickle_ast(meta["partition_by"])
-            if isinstance(part_expr, A.Ident):
-                part_cols = [part_expr.name]
-            else:
-                staged = staged.withColumn(
-                    "__part", low._expr(part_expr, None, {}, [])
-                )
-                part_cols = ["__part"]
-        if meta["order_by"]:
-            staged = staged.sortWithinPartitions(*meta["order_by"])
-        writer = staged.write.mode("overwrite")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
         data_path = self._data_path(stmt.table)
-        # per-statement staging dir: concurrent inserts into the same
-        # table must not clobber each other's staging output, and a
-        # crashed statement's leftover dir must never be swept into a
-        # later statement's move loop
-        import uuid
-
-        tmp = data_path + f".__insert_tmp_{uuid.uuid4().hex}"
+        # per-statement staging dir, named like a commit's so a crashed
+        # statement's leftover is dropped when the catalog next opens:
+        # concurrent inserts into the same table must not clobber each
+        # other's staging output, and a leftover dir must never be
+        # swept into a later statement's move loop
+        tmp = _entry(self.root, uuid.uuid4().hex, "new")
         new_files: list[str] = []
         try:
-            writer.parquet(tmp)
+            self._write_table(staged, tmp, meta, low)
             if obs is not None:
                 flags = obs.get
                 for i, (_, msg) in enumerate(violations):
@@ -703,7 +793,9 @@ class Catalog:
                     )
                 )
         for con in meta["constraints"]:
-            check = low._expr(_unpickle_ast(con["check"]), None, {}, [])
+            check = low._expr(
+                Parser(con["check"]).parse_expr(), None, {}, []
+            )
             # SQL semantics: a CHECK whose predicate is UNKNOWN passes.
             violations.append(
                 (
@@ -712,19 +804,6 @@ class Catalog:
                 )
             )
         return violations
-
-    def _referenced_tables(self, node, out: set[str]) -> None:
-        if isinstance(node, A.TableRef):
-            out.add(node.name)
-            return
-        if isinstance(node, (str, int, float, bool, bytes)) or node is None:
-            return
-        if isinstance(node, (list, tuple)):
-            for x in node:
-                self._referenced_tables(x, out)
-            return
-        for f in getattr(node, "__dataclass_fields__", {}):
-            self._referenced_tables(getattr(node, f), out)
 
     def _refresh_dependent_views(
         self, table: str, low, delta=None
@@ -737,54 +816,37 @@ class Catalog:
         callable returning the insert's rows (or None) — evaluated only
         if an incremental view needs it, so plain inserts pay nothing."""
         delta_df: DataFrame | None | bool = False  # False = not built yet
-        for f in os.listdir(self.root):
-            if not f.endswith(".json"):
+        for meta, _q in self._dependent_views(table):
+            if meta.get("maintenance") == "incremental" and delta is not None:
+                if delta_df is False:
+                    delta_df = delta()
+                if delta_df is not None:
+                    self._delta_merge_view(meta, table, delta_df, low)
                 continue
-            meta = self._load_meta(f[:-5])
-            if meta and meta["type"] == "view":
-                refs: set[str] = set()
-                self._referenced_tables(_unpickle_ast(meta["query"]), refs)
-                if table not in refs:
-                    continue
-                if meta.get("maintenance") == "incremental" and delta is not None:
-                    if delta_df is False:
-                        delta_df = delta()
-                    if delta_df is not None:
-                        self._delta_merge_view(meta, table, delta_df, low)
-                    continue
-                self.refresh_view(meta["name"], low)
+            self.refresh_view(meta["name"], low)
 
-    def _rename_refs(self, node, old: str, new: str) -> None:
-        if isinstance(node, A.TableRef):
-            if node.name == old:
-                node.name = new
-            return
-        if isinstance(node, (str, int, float, bool, bytes)) or node is None:
-            return
-        if isinstance(node, (list, tuple)):
-            for x in node:
-                self._rename_refs(x, old, new)
-            return
-        for f in getattr(node, "__dataclass_fields__", {}):
-            self._rename_refs(getattr(node, f), old, new)
+    def _dependent_views(self, table: str):
+        """Each view whose defining query reads ``table``, with that
+        query parsed."""
+        for meta in self.objects():
+            if meta["type"] != "view":
+                continue
+            try:
+                q = self.view_query(meta)
+            except CatalogError:
+                continue  # unreadable: reads of it raise instead
+            if any(r.name == table for r in _table_refs(q)):
+                yield meta, q
 
     def _rename_in_views(self, old: str, new: str) -> None:
         """Follow a table rename through every dependent view's stored
-        query AST (ALTER … RENAME would otherwise orphan the views:
+        query (ALTER … RENAME would otherwise orphan the views:
         refreshes and delta merges resolve by name)."""
-        for f in os.listdir(self.root):
-            if not f.endswith(".json"):
-                continue
-            meta = self._load_meta(f[:-5])
-            if not meta or meta["type"] != "view":
-                continue
-            refs: set[str] = set()
-            q = _unpickle_ast(meta["query"])
-            self._referenced_tables(q, refs)
-            if old not in refs:
-                continue
-            self._rename_refs(q, old, new)
-            meta["query"] = _pickle_ast(q)
+        for meta, q in self._dependent_views(old):
+            for ref in _table_refs(q):
+                if ref.name == old:
+                    ref.name = new
+            meta["query"] = printer.query(q)
             self._save_meta(meta["name"], meta)
 
     def _repair_dependent_views(self, table: str, low) -> None:
@@ -795,16 +857,7 @@ class Catalog:
         in the view forever and reads would be silently wrong. Rebuild
         incremental state from the full query; re-run full-refresh
         views for read-consistency before the next insert."""
-        for f in os.listdir(self.root):
-            if not f.endswith(".json"):
-                continue
-            meta = self._load_meta(f[:-5])
-            if not meta or meta["type"] != "view":
-                continue
-            refs: set[str] = set()
-            self._referenced_tables(_unpickle_ast(meta["query"]), refs)
-            if table not in refs:
-                continue
+        for meta, _q in self._dependent_views(table):
             if meta.get("maintenance") == "incremental":
                 self._rebuild_incremental(meta, low)
             else:
@@ -837,7 +890,7 @@ class Catalog:
                     "strategy": "plain",
                     "order_by": v.order_by,
                     "primary_key": v.primary_key,
-                    "query": _pickle_ast(v.query),
+                    "query": printer.query(v.query),
                 },
             )
             return
@@ -859,7 +912,7 @@ class Catalog:
             "strategy": strategy,
             "order_by": v.order_by,
             "primary_key": v.primary_key,
-            "query": _pickle_ast(v.query),
+            "query": printer.query(v.query),
         }
         self._mark_incremental_if_eligible(meta, low)
         self._save_meta(v.name, meta)
@@ -876,7 +929,7 @@ class Catalog:
         merges any column type). State is then bucketed parquet merged
         per insert — O(touched buckets) per batch instead of a full
         recompute, the property that keeps a 100 TB view maintainable."""
-        q = _unpickle_ast(meta["query"])
+        q = self.view_query(meta)
         if meta["strategy"] == "aggregating":
             # [EXT] Aggregating views carry their OWN GROUP BY; the
             # delta contract is re-aggregatability (sum/count/min/max
@@ -910,7 +963,6 @@ class Catalog:
             merged_schema = probe.select(*df.columns).schema.json()
         meta["maintenance"] = "incremental"
         meta["out_columns"] = df.columns
-        meta["n_buckets"] = 16  # state-layout knob; raise at real scale
         meta["merged_schema"] = merged_schema
 
     def _mark_aggregating_incremental(self, meta: dict, q, low) -> None:
@@ -975,7 +1027,6 @@ class Catalog:
         meta["maintenance"] = "incremental"
         meta["out_columns"] = df.columns
         meta["merge_ops"] = ops
-        meta["n_buckets"] = 16
         meta["merged_schema"] = df.schema.json()
 
     def show_create(self, meta: dict) -> str:
@@ -1022,14 +1073,7 @@ class Catalog:
             return base
 
         if meta["type"] == "view":
-            # best-effort re-executable query text; exotic clauses the
-            # printer doesn't cover fall back to the loud placeholder
-            try:
-                from nutdb_spark.frontend.printer import query as _pq
-
-                q = _pq(_unpickle_ast(meta["query"]))
-            except Exception:
-                q = "<stored query>"
+            q = meta["query"]
             if meta.get("strategy") == "plain":
                 return f"CREATE VIEW {meta['name']} AS {q}"
             out = (
@@ -1048,7 +1092,7 @@ class Catalog:
         if meta.get("order_by"):
             out += f" ORDER BY ({', '.join(meta['order_by'])})"
         if meta.get("partition_by"):
-            out += " PARTITION BY <expr>"
+            out += f" PARTITION BY {meta['partition_by']}"
         if meta.get("engine"):
             out += f" ENGINE = {meta['engine']}"
         return out
@@ -1056,42 +1100,48 @@ class Catalog:
     def _state_path(self, name: str) -> str:
         return self._data_path(name)
 
-    def _state_merge(self, meta: dict, batch: DataFrame) -> None:
+    def _state_merge(
+        self, meta: dict, batch: DataFrame, state: str | None = None
+    ) -> None:
         """Merge one batch of view-query output rows into the bucketed
-        state per the view's strategy."""
+        state (the view's own, unless ``state`` names another) per the
+        view's strategy."""
         from nutdb_spark.streaming.summing import (
             replacing_merge_batch,
             summing_merge_batch,
         )
 
         keys = meta["order_by"]
-        state = self._state_path(meta["name"])
-        buckets = meta.get("n_buckets", 64)
+        state = state or self._state_path(meta["name"])
         batch = batch.select(*meta["out_columns"])
         if meta["strategy"] == "replacing":
             replacing_merge_batch(
-                batch, keys, meta["primary_key"], state, buckets
+                batch, keys, meta["primary_key"], state, _VIEW_BUCKETS
             )
         elif meta["strategy"] == "aggregating":
             from nutdb_spark.streaming.summing import aggregating_merge_batch
 
             aggregating_merge_batch(
-                batch, keys, meta["merge_ops"], state, buckets
+                batch, keys, meta["merge_ops"], state, _VIEW_BUCKETS
             )
         else:
             sums = [c for c in meta["out_columns"] if c not in keys]
-            summing_merge_batch(batch, keys, sums, state, buckets)
+            summing_merge_batch(batch, keys, sums, state, _VIEW_BUCKETS)
 
     def _rebuild_incremental(self, meta: dict, low) -> None:
         """(Re)build the bucketed state from the full defining query —
-        the bootstrap at CREATE time (and the fallback repair path)."""
-        state = self._state_path(meta["name"])
-        if os.path.exists(state):
-            shutil.rmtree(state)
-        os.makedirs(state, exist_ok=True)
-        self._state_merge(
-            meta, low.lower_query(_unpickle_ast(meta["query"]))
-        )
+        the bootstrap at CREATE time (and the fallback repair path).
+        The new state is staged whole and committed over the old one, so
+        the view keeps its state until the rebuild query has run."""
+        name = meta["name"]
+        df = low.lower_query(self.view_query(meta))
+
+        def write(staged: str) -> None:
+            state = os.path.join(staged, name)
+            self._state_merge(meta, df, state)
+            os.makedirs(state, exist_ok=True)  # a view over no rows
+
+        commit(self.root, [name], write)
 
     def _delta_merge_view(
         self, meta: dict, table: str, delta: DataFrame, low
@@ -1102,7 +1152,7 @@ class Catalog:
         inserted table contribute nothing)."""
         from nutdb_spark.frontend.lower import Lowerer
 
-        branches = _unionall_branches(_unpickle_ast(meta["query"]))
+        branches = _unionall_branches(self.view_query(meta))
         base_resolve = low.resolve_table
 
         def resolve(name: str) -> DataFrame:
@@ -1113,9 +1163,7 @@ class Catalog:
         low2 = Lowerer(self.spark, resolve, low.params)
         parts = []
         for b in branches:
-            refs: set[str] = set()
-            self._referenced_tables(b, refs)
-            if table in refs:
+            if any(r.name == table for r in _table_refs(b)):
                 parts.append(low2.lower_query(b))
         if not parts:
             return
@@ -1125,16 +1173,17 @@ class Catalog:
         self._state_merge(meta, out)
 
     def refresh_view(self, name: str, low) -> None:
-        if (self._load_meta(name) or {}).get("strategy") == "plain":
-            return  # nothing materialized to refresh
         """Full refresh: re-run the defining query and apply the merge
         strategy — Summing: sum numeric non-key columns per ORDER BY
         key (ClickHouse SummingMergeTree semantics; non-numeric
         non-key columns keep an arbitrary representative via `first`);
         Replacing: keep, per ORDER BY key, the row with the greatest
-        PRIMARY KEY version (ReplacingMergeTree(ver) semantics)."""
+        PRIMARY KEY version (ReplacingMergeTree(ver) semantics). The
+        result is staged and committed over the view's data."""
         meta = self._load_meta(name)
-        df = low.lower_query(_unpickle_ast(meta["query"]))
+        if meta.get("strategy") == "plain":
+            return  # nothing materialized to refresh
+        df = low.lower_query(self.view_query(meta))
         keys = meta["order_by"]
         if meta.get("strategy") == "replacing":
             from nutdb_spark.operators import relational as R
@@ -1155,16 +1204,20 @@ class Catalog:
                 if c not in keys
             ]
             merged = df.groupBy(*keys).agg(*aggs).select(*df.columns)
-        tmp = self._data_path(name) + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        final = self._data_path(name)
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        self._commit_frame(name, merged)
+
+    def _commit_frame(self, name: str, df: DataFrame) -> None:
+        """Stage ``df`` as the data of object ``name`` and commit it."""
+        commit(
+            self.root,
+            [name],
+            lambda staged: df.write.parquet(os.path.join(staged, name)),
+        )
 
     def read_view(self, name: str) -> DataFrame:
         meta = self._load_meta(name)
-        if meta and meta.get("maintenance") == "incremental":
+        self.view_query(meta)  # a view that cannot be maintained is unreadable
+        if meta.get("maintenance") == "incremental":
             state = self._state_path(name)
             if not any(
                 d.startswith("__bucket=")
@@ -1255,11 +1308,7 @@ class Catalog:
 
     def describe(self, stmt: A.DescribeStmt, engine) -> DataFrame:
         if stmt.entity == "database":
-            rows = []
-            for f in sorted(os.listdir(self.root)):
-                if f.endswith(".json"):
-                    m = self._load_meta(f[:-5])
-                    rows.append((m["name"], m["type"]))
+            rows = [(m["name"], m["type"]) for m in self.objects()]
             return self.spark.createDataFrame(
                 rows or [("", "")], "name: string, type: string"
             )
@@ -1295,9 +1344,7 @@ class Catalog:
             if stmt.if_exists:
                 return
             raise CatalogError(f"unknown {stmt.entity} {stmt.name!r}")
-        os.remove(self._meta_path(stmt.name))
-        if os.path.exists(self._data_path(stmt.name)):
-            shutil.rmtree(self._data_path(stmt.name))
+        commit(self.root, [stmt.name + ".json", stmt.name])
 
     def truncate(self, stmt: A.TruncateStmt, low=None) -> None:
         meta = self._load_meta(stmt.name)
@@ -1305,9 +1352,11 @@ class Catalog:
             if stmt.if_exists:
                 return
             raise CatalogError(f"unknown {stmt.entity} {stmt.name!r}")
-        path = self._data_path(stmt.name)
-        shutil.rmtree(path)
-        os.makedirs(path, exist_ok=True)
+        commit(
+            self.root,
+            [stmt.name],
+            lambda staged: os.makedirs(os.path.join(staged, stmt.name)),
+        )
         if stmt.entity == "table" and low is not None:
             self._repair_dependent_views(stmt.name, low)
 
@@ -1328,7 +1377,7 @@ class Catalog:
                 "spark_type": to_spark_type(col.dtype).json(),
                 "nullable": col.dtype.nullable,
                 "serial": col.dtype.name in _SERIAL_TYPES,
-                "default": _pickle_ast(col.default) if col.default else None,
+                "default": _sql(col.default),
                 "comment": col.comment,
                 "max_len": None,
             }
@@ -1371,23 +1420,20 @@ class Catalog:
             entry["spark_type"] = to_spark_type(col.dtype).json()
             entry["nullable"] = col.dtype.nullable
             if col.default is not None:
-                entry["default"] = _pickle_ast(col.default)
+                entry["default"] = printer.expr(col.default)
             self._rewrite(stmt.table, meta, low)
         elif act == "add_index":
-            meta["indexes"].append(
-                {
-                    "name": stmt.payload.name,
-                    "fn": stmt.payload.fn.name,
-                    "args": _pickle_ast(stmt.payload.fn.args),
-                }
-            )
+            meta["indexes"].append(_index_meta(stmt.payload))
         elif act == "drop_index":
             meta["indexes"] = [
                 i for i in meta["indexes"] if i["name"] != stmt.payload
             ]
         elif act == "add_constraint":
             meta["constraints"].append(
-                {"name": stmt.payload.name, "check": _pickle_ast(stmt.payload.check)}
+                {
+                    "name": stmt.payload.name,
+                    "check": printer.expr(stmt.payload.check),
+                }
             )
         elif act == "drop_constraint":
             meta["constraints"] = [
@@ -1398,19 +1444,18 @@ class Catalog:
             val = stmt.payload
             col = None
             if meta["partition_by"]:
-                pexpr = _unpickle_ast(meta["partition_by"])
+                pexpr = Parser(meta["partition_by"]).parse_expr()
                 col = pexpr.name if isinstance(pexpr, A.Ident) else "__part"
             if col is None:
                 raise CatalogError("table is not partitioned")
             lit = val.value if isinstance(val, A.Lit) else None
-            pdir = os.path.join(self._data_path(stmt.table), f"{col}={lit}")
-            if os.path.exists(pdir):
-                shutil.rmtree(pdir)
+            commit(self._data_path(stmt.table), [f"{col}={lit}"])
         elif act == "update":
             # [EXT] ClickHouse mutation: rewrite matched rows in place.
             # Same scale shape as ClickHouse's own mutations: a full
             # read → conditional projection → rewrite, distributed end
-            # to end (no driver materialization), atomic via tmp+rename.
+            # to end (no driver materialization), committed whole by
+            # _overwrite.
             assignments, cond = stmt.payload
             by_name = {c["name"]: c for c in meta["columns"]}
             for cname, _ in assignments:
@@ -1451,13 +1496,16 @@ class Catalog:
                 os.rename(self._data_path(stmt.table), self._data_path(new))
             meta["name"] = new
             self._save_meta(new, meta)
-            # dependent views' pickled queries still name the old table
+            # dependent views' stored queries still name the old table
             # — rewrite their TableRefs or every future refresh breaks
             self._rename_in_views(stmt.table, new)
             return
         else:
             raise CatalogError(f"unsupported ALTER action {act}")
-        self._save_meta(stmt.table, meta)
+        if act not in (
+            "add_column", "drop_column", "rename_column", "modify_column",
+        ):
+            self._save_meta(stmt.table, meta)  # _rewrite committed it
         # Data-mutating ALTERs invalidate incremental view state (the
         # delta-merge path never sees removed/rewritten rows).
         if act in (
@@ -1469,10 +1517,10 @@ class Catalog:
     def merge(self, stmt: "A.MergeStmt", low) -> None:
         """[EXT] ANSI MERGE INTO — the warehouse upsert, executed over
         the same primitives as the ClickHouse-style mutations: one
-        source⋈target decision join, an atomic full rewrite
-        (tmp+rename) for updates/deletes, and the standard INSERT path
-        (defaults, serials, CHECK enforcement) for the not-matched
-        rows. Semantics pinned by tests: WHEN clauses apply in order
+        source⋈target decision join, a full rewrite that _overwrite
+        swaps in through :func:`commit` for updates/deletes, and the
+        standard INSERT path (defaults, serials, CHECK enforcement)
+        for the not-matched rows. Semantics pinned by tests: WHEN clauses apply in order
         (first matching clause per row wins); a target row matching
         MULTIPLE source rows is an error (the ANSI cardinality rule —
         a nondeterministic multi-update must never be silent); rows
@@ -1733,14 +1781,13 @@ class Catalog:
         *,
         validate: bool = False,
     ) -> None:
-        """Atomic full-table rewrite preserving the declared partition
-        layout and ORDER BY clustering (tmp write + dir swap, same as
-        _rewrite/optimize). With ``validate=True`` the constraint
-        flags ride the tmp write itself via observe() — one pass over
-        the rewritten rows instead of a validation aggregate plus the
-        write — and a violation aborts BEFORE the dir swap, so the
-        live table is untouched either way."""
-        path = self._data_path(name)
+        """Full-table rewrite preserving the declared partition layout
+        and ORDER BY clustering, staged and swapped in by
+        :func:`commit`. With ``validate=True`` the constraint flags
+        ride the staged write itself via observe() — one pass over the
+        rewritten rows instead of a validation aggregate plus the write
+        — and a violation aborts BEFORE the swap, so the live table is
+        untouched either way."""
         violations = self._violation_conds(meta, low) if validate else []
         obs = None
         if violations:
@@ -1754,35 +1801,21 @@ class Catalog:
                     for i, (cond, _) in enumerate(violations)
                 ],
             )
-        part_cols: list[str] = []
-        if meta["partition_by"]:
-            pe = _unpickle_ast(meta["partition_by"])
-            if isinstance(pe, A.Ident):
-                part_cols = [pe.name]
-            else:
-                df = df.withColumn("__part", low._expr(pe, None, {}, []))
-                part_cols = ["__part"]
-        if meta["order_by"]:
-            df = df.sortWithinPartitions(*meta["order_by"])
-        tmp = path + ".tmp"
-        try:
-            w = df.write.mode("overwrite")
-            if part_cols:
-                w = w.partitionBy(*part_cols)
-            w.parquet(tmp)
+
+        def write(staged: str) -> None:
+            self._write_table(df, os.path.join(staged, name), meta, low)
             if obs is not None:
                 flags = obs.get
                 for i, (_, msg) in enumerate(violations):
                     if flags.get(f"v{i}"):
                         raise CatalogError(msg)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        shutil.rmtree(path, ignore_errors=True)
-        os.rename(tmp, path)
+
+        commit(self.root, [name], write)
 
     def _rewrite(self, name: str, meta: dict, low, rename=None) -> None:
-        """Schema-evolution rewrite (columns added/dropped/renamed)."""
+        """Schema-evolution rewrite (columns added/dropped/renamed or
+        retyped): the data directory and the new sidecar commit as one
+        unit."""
         old = self.read_table(name) if rename is None else (
             self.spark.read.parquet(self._data_path(name))
         )
@@ -1795,21 +1828,24 @@ class Catalog:
                 cols.append(F.col(c["name"]).cast(stype).alias(c["name"]))
             elif c["default"] is not None:
                 cols.append(
-                    low._expr(_unpickle_ast(c["default"]), None, {}, [])
+                    low._expr(Parser(c["default"]).parse_expr(), None, {}, [])
                     .cast(stype)
                     .alias(c["name"])
                 )
             else:
                 cols.append(F.lit(None).cast(stype).alias(c["name"]))
         out = old.select(*cols)
-        tmp = self._data_path(name) + ".tmp"
-        out.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(self._data_path(name))
-        os.rename(tmp, self._data_path(name))
+
+        def write(staged: str) -> None:
+            out.write.parquet(os.path.join(staged, name))
+            _dump(os.path.join(staged, name + ".json"), meta)
+
+        commit(self.root, [name, name + ".json"], write)
 
     def optimize(self, stmt: A.OptimizeStmt, low) -> None:
         """S14: small-file compaction (Delta-style OPTIMIZE by hand):
-        read → repartition to ~128 MB targets → atomic overwrite."""
+        read → repartition to ~128 MB targets → staged write swapped in
+        by :func:`commit`."""
         meta = self._load_meta(stmt.table)
         if meta is None:
             raise CatalogError(f"unknown table {stmt.table!r}")
@@ -1821,7 +1857,6 @@ class Catalog:
             for f in fs
         )
         target = max(1, size // (128 << 20) + 1)
-        tmp = path + ".tmp"
         if getattr(stmt, "deduplicate", False):
             by = getattr(stmt, "dedup_by", None)
             if by:
@@ -1854,51 +1889,29 @@ class Catalog:
         out = df.repartition(target)
         if meta["order_by"]:
             out = out.sortWithinPartitions(*meta["order_by"])
-        out.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(path)
-        os.rename(tmp, path)
+        self._commit_frame(stmt.table, out)
         # Compaction preserves content, but rebuild dependent
         # incremental state anyway: OPTIMIZE is the documented repair
         # hook for views knocked stale by external file surgery.
         self._repair_dependent_views(stmt.table, low)
 
 
-def _pickle_ast(node) -> str:
-    return base64.b64encode(pickle.dumps(node)).decode()
+def _sql(e) -> str | None:
+    """An optional stored expression as dialect SQL."""
+    return None if e is None else printer.expr(e)
 
 
-def _upgrade_ast(node, _seen=None):
-    """Fill dataclass fields added AFTER a pickled AST was persisted
-    with their declared defaults, so every walker (getattr over
-    __dataclass_fields__) keeps working on catalogs written by older
-    engine versions."""
-    import dataclasses
-
-    if _seen is None:
-        _seen = set()
-    if id(node) in _seen:
-        return node
-    _seen.add(id(node))
-    if isinstance(node, (list, tuple)):
-        for x in node:
-            _upgrade_ast(x, _seen)
-        return node
-    if not hasattr(node, "__dataclass_fields__"):
-        return node
-    for f in dataclasses.fields(node):
-        if f.name not in node.__dict__:
-            if f.default is not dataclasses.MISSING:
-                setattr(node, f.name, f.default)
-            elif f.default_factory is not dataclasses.MISSING:
-                setattr(node, f.name, f.default_factory())
-            else:
-                setattr(node, f.name, None)
-        _upgrade_ast(getattr(node, f.name), _seen)
-    return node
+def _dump(path: str, obj) -> None:
+    with open(path, "w") as f:
+        json.dump(obj, f, indent=1)
 
 
-def _unpickle_ast(s: str):
-    return _upgrade_ast(pickle.loads(base64.b64decode(s)))
+def _index_meta(i: A.IndexDef) -> dict:
+    return {
+        "name": i.name,
+        "fn": i.fn.name,
+        "args": [printer.expr(a) for a in i.fn.args],
+    }
 
 
 def _parse_type(js: str) -> S.DataType:

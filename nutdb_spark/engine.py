@@ -19,6 +19,7 @@ from dataclasses import replace as _dc_replace
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nutdb_spark.catalog import Catalog, CatalogError
 from nutdb_spark.frontend import ast_nodes as A
 from nutdb_spark.frontend.lower import Lowerer, LoweringError
 from nutdb_spark.frontend.parser import parse
@@ -49,8 +50,6 @@ class NutEngine:
         self.data_dir = data_dir or os.environ.get(
             "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"
         )
-        from nutdb_spark.catalog import Catalog
-
         self.catalog = Catalog(self.spark, catalog_dir)
         self.config: dict[str, object] = {}
 
@@ -65,8 +64,6 @@ class NutEngine:
                 # [EXT] plain view: lower the stored query fresh —
                 # fully composable with the outer plan (pushdowns and
                 # pruning cross the view boundary). Guard cycles.
-                from nutdb_spark.catalog import _unpickle_ast
-
                 stack = getattr(self, "_view_stack", set())
                 if name in stack:
                     raise LoweringError(
@@ -78,7 +75,7 @@ class NutEngine:
                         self.spark, self.resolve_table,
                         config=self.config,
                     )
-                    return low.lower_query(_unpickle_ast(meta["query"]))
+                    return low.lower_query(self.catalog.view_query(meta))
                 finally:
                     self._view_stack = stack
             return self.catalog.read_view(name)
@@ -98,16 +95,12 @@ class NutEngine:
         cached = getattr(self, "_rw_views_cache", None)
         if cached is not None and cached[0] == stamp:
             return cached[1]
-        out = []
-        for f in sorted(os.listdir(self.catalog.root)):
-            if f.endswith(".json"):
-                m = self.catalog._load_meta(f[:-5])
-                if (
-                    m
-                    and m.get("type") == "view"
-                    and m.get("strategy") in ("summing", "aggregating")
-                ):
-                    out.append(m)
+        out = [
+            m
+            for m in self.catalog.objects()
+            if m["type"] == "view"
+            and m.get("strategy") in ("summing", "aggregating")
+        ]
         self._rw_views_cache = (stamp, out)
         return out
 
@@ -288,9 +281,10 @@ class NutEngine:
     def _match_view(self, meta, base, keys, items, wcols, q):
         import copy as _copy
 
-        from nutdb_spark.catalog import _unpickle_ast
-
-        vq = _unpickle_ast(meta["query"])
+        try:
+            vq = self.catalog.view_query(meta)
+        except CatalogError:
+            return None  # unreadable views answer nothing
         # (agg canonical form → (view column, re-aggregation fn))
         aggmap: dict = {}
         if meta["strategy"] == "summing":
@@ -379,11 +373,9 @@ class NutEngine:
 
     def _list_tables(self) -> list[str]:
         names = set(TABLES)
-        for f in os.listdir(self.catalog.root):
-            if f.endswith(".json"):
-                m = self.catalog._load_meta(f[:-5])
-                if m and m.get("type") == "table":
-                    names.add(m["name"])
+        names.update(
+            m["name"] for m in self.catalog.objects() if m["type"] == "table"
+        )
         return sorted(names)
 
     def sql(self, text: str, params: list | None = None):
@@ -601,24 +593,19 @@ class NutEngine:
         SHOW CREATE TABLE — DDL reconstructed from the sidecar
         metadata (type names are the catalog's stored dialect names;
         CTAS tables print their derived schema)."""
-        import os
-
         if stmt.entity == "create":
             meta = self.catalog._load_meta(stmt.name)
             if meta is None:
-                from nutdb_spark.catalog import CatalogError
-
                 raise CatalogError(f"unknown object {stmt.name!r}")
             ddl = self.catalog.show_create(meta)
             return self.spark.createDataFrame(
                 [(stmt.name, ddl)], "name: string, create_query: string"
             )
-        rows = []
-        for f in sorted(os.listdir(self.catalog.root)):
-            if f.endswith(".json"):
-                m = self.catalog._load_meta(f[:-5])
-                if stmt.entity == "database" or m["type"] == stmt.entity:
-                    rows.append((m["name"], m["type"]))
+        rows = [
+            (m["name"], m["type"])
+            for m in self.catalog.objects()
+            if stmt.entity == "database" or m["type"] == stmt.entity
+        ]
         return self.spark.createDataFrame(rows, "name: string, type: string")
 
 

@@ -1,12 +1,12 @@
 """[EXT] AST → dialect-SQL printer.
 
 Renders a parsed query back to dialect text — the engine side of
-EXPLAIN SYNTAX and the re-executable query in SHOW CREATE VIEW. The
-contract is ROUND-TRIP FIDELITY, not byte identity: parse(print(ast))
-must lower to the same result as the original (pinned in
-tests/test_printer.py). Unknown node types raise ``Unprintable`` so a
-caller can fall back loudly ("<stored query>") instead of emitting
-wrong SQL.
+EXPLAIN SYNTAX and the catalog's stored format: every stored expression
+and view query is printed text, parsed again on use (so SHOW CREATE
+prints it as it is). The contract is ROUND-TRIP FIDELITY, not byte
+identity: parse(print(ast)) must lower to the same result as the
+original (pinned in tests/test_printer.py). Unknown node types raise
+``Unprintable`` instead of emitting wrong SQL.
 """
 
 from __future__ import annotations

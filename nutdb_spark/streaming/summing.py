@@ -16,24 +16,24 @@ per-batch work is O(touched state), not O(total state) — the property
 that keeps a large materialized view maintainable at 100 TB, where a
 batch touching 0.1% of keys must not rewrite the other 99.9%. Untouched
 bucket directories are left physically untouched (tests assert their
-mtimes). Swap is per-bucket tmp-write-then-rename (single-writer
-assumption, which Structured Streaming's one-query-per-sink guarantees).
+mtimes). The touched buckets are staged and swapped in as one batch by
+``catalog.commit`` (single-writer assumption, which Structured
+Streaming's one-query-per-sink guarantees).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from nutdb_spark.catalog import commit
 
 DEFAULT_BUCKETS = 64
 
 
 def _bucket_dirs(state_path: str) -> list[str]:
-    if not os.path.isdir(state_path):
-        return []
     return [d for d in os.listdir(state_path) if d.startswith("__bucket=")]
 
 
@@ -42,9 +42,13 @@ def _merge_touched_buckets(
 ) -> None:
     """Shared bucketed-state maintenance: given a batch partial that
     carries an int ``__bucket`` column, read ONLY the touched state
-    buckets, apply ``merge(state ∪ partial) -> merged`` and swap the
-    touched bucket directories (tmp-write-then-rename; single-writer).
+    buckets, apply ``merge(state ∪ partial) -> merged`` and commit the
+    touched bucket directories as one batch (single-writer). A state
+    that does not exist yet is written in place: nothing live to keep.
     The only driver-side values are the touched bucket ids (≤ B)."""
+    if not os.path.isdir(state_path):
+        partial.write.partitionBy("__bucket").parquet(state_path)
+        return
     spark = partial.sparkSession
     touched = sorted(
         r["__bucket"] for r in partial.select("__bucket").distinct().collect()
@@ -60,19 +64,15 @@ def _merge_touched_buckets(
     if hit:
         state = spark.read.option("basePath", state_path).parquet(*hit)
         partial = merge(state.unionByName(partial))
-    tmp = state_path + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    partial.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
-    os.makedirs(state_path, exist_ok=True)
-    for b in touched:
-        src = os.path.join(tmp, f"__bucket={b}")
-        dst = os.path.join(state_path, f"__bucket={b}")
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        if os.path.exists(src):  # a bucket can aggregate to zero rows
-            os.rename(src, dst)
-    shutil.rmtree(tmp)
+    # a touched bucket that aggregates to zero rows is not written, so
+    # the commit removes it
+    commit(
+        state_path,
+        [f"__bucket={b}" for b in touched],
+        lambda staged: partial.write.mode("overwrite")
+        .partitionBy("__bucket")
+        .parquet(staged),
+    )
 
 
 def _with_bucket(df: DataFrame, keys: list[str], n_buckets: int) -> DataFrame:
@@ -134,14 +134,8 @@ def replacing_merge_batch(
             *keys, *[F.col("__row")[c].alias(c) for c in payload], "__bucket"
         )
 
-    partial = keep_max(
-        _with_bucket(batch_df, keys, n_buckets)
-    )
-
-    def merge(both: DataFrame) -> DataFrame:
-        return keep_max(both)
-
-    _merge_touched_buckets(partial, merge, state_path)
+    partial = keep_max(_with_bucket(batch_df, keys, n_buckets))
+    _merge_touched_buckets(partial, keep_max, state_path)
 
 
 def incremental_summing(

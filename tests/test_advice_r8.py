@@ -11,15 +11,13 @@ round"):
    grand-total row over a hot table, no per-group collect_list.
 3. SETTINGS statement-scopes non-spark names too: a SETTINGS-set @var
    does not leak into the next statement (SET stays durable).
-4. CTAS OR REPLACE is a true swap: the old table's data directory is
-   renamed aside and only deleted after the new one is in place — a
-   failed write or a failed rename-in leaves the OLD table intact and
-   no staging litter.
+
+(CTAS OR REPLACE as a true swap is pinned with every other catalog
+commit in test_catalog_commit.py.)
 """
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 import pytest
@@ -204,65 +202,6 @@ def test_settings_nonspark_name_does_not_leak(eng):
 def test_settings_new_name_removed_after_statement(eng):
     eng.sql("select 1 as x settings brand_new = 7").collect()
     assert "brand_new" not in eng.config
-
-
-# --- 4: CTAS true swap ----------------------------------------------------
-
-
-def _table_dir(eng, name):
-    return eng.catalog._data_path(name)
-
-
-def test_ctas_replace_failed_write_keeps_old_table(eng, monkeypatch):
-    eng.sql("CREATE TABLE swp AS SELECT n_nationkey FROM nation")
-    before = eng.sql("SELECT count(*) AS n FROM swp").collect()[0]["n"]
-
-    import pyspark.sql.readwriter as rw
-
-    def boom(self, path, **kw):
-        raise RuntimeError("simulated write crash")
-
-    monkeypatch.setattr(rw.DataFrameWriter, "parquet", boom)
-    with pytest.raises(RuntimeError, match="simulated write crash"):
-        eng.sql(
-            "CREATE OR REPLACE TABLE swp AS SELECT n_regionkey FROM nation"
-        )
-    monkeypatch.undo()
-    # old table fully intact, no staging litter
-    assert eng.sql("SELECT count(*) AS n FROM swp").collect()[0]["n"] == before
-    assert not os.path.exists(_table_dir(eng, "swp") + ".tmp")
-    assert not os.path.exists(_table_dir(eng, "swp") + ".old")
-
-
-def test_ctas_replace_failed_rename_in_rolls_old_back(eng, monkeypatch):
-    eng.sql("CREATE TABLE swp2 AS SELECT n_nationkey FROM nation")
-    before = {
-        r["n_nationkey"]
-        for r in eng.sql("SELECT n_nationkey FROM swp2").collect()
-    }
-
-    import nutdb_spark.catalog as cat
-
-    real_rename = os.rename
-
-    def flaky(src, dst):
-        if src.endswith(".tmp"):
-            raise OSError("simulated crash between the two renames")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(cat.os, "rename", flaky)
-    with pytest.raises(OSError, match="simulated crash"):
-        eng.sql(
-            "CREATE OR REPLACE TABLE swp2 AS SELECT n_regionkey FROM nation"
-        )
-    monkeypatch.undo()
-    after = {
-        r["n_nationkey"]
-        for r in eng.sql("SELECT n_nationkey FROM swp2").collect()
-    }
-    assert after == before
-    assert not os.path.exists(_table_dir(eng, "swp2") + ".tmp")
-    assert not os.path.exists(_table_dir(eng, "swp2") + ".old")
 
 
 def test_dictget_same_values_across_regime_threshold(spark, eng):

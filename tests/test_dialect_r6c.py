@@ -7,6 +7,8 @@ failure branches.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from nutdb_spark.frontend import ast_nodes as A
@@ -907,7 +909,7 @@ def test_sequence_match_bad_patterns(spark):
         _parse_seq_pattern("(?1)(?t<=3)", 1)
 
 
-# --- topKWeighted / sumMap / pickle upgrades --------------------------------
+# --- topKWeighted / sumMap ---------------------------------------------------
 
 
 def test_topk_weighted(spark):
@@ -945,25 +947,6 @@ def test_summap_via_sql(spark):
         "from nation where n_nationkey < 3"
     ).collect()[0]["m"]
     assert r == {"x": 3, "y": 3}
-
-
-def test_unpickle_upgrades_old_asts(spark):
-    # simulate a catalog written before a dataclass field existed:
-    # strip instance attrs, unpickle, and walk with the new fields
-    import pickle
-
-    from nutdb_spark.catalog import _pickle_ast, _unpickle_ast
-    from nutdb_spark.frontend.parser import parse
-
-    q = parse("select a from t where b > 1").query
-    blob = _pickle_ast(q)
-    revived = _unpickle_ast(blob)
-    core = revived
-    # delete a newer field as an old pickle would lack it
-    del core.__dict__["expr_aliases"]
-    blob2 = _pickle_ast(core)
-    revived2 = _unpickle_ast(blob2)
-    assert revived2.expr_aliases == []  # refilled with the default
 
 
 # --- cast surface ----------------------------------------------------------
@@ -1212,6 +1195,26 @@ def test_show_create_table(spark, tmp_path):
     from nutdb_spark.frontend.parser import parse
 
     parse(ddl)
+    # a PARTITION BY expression prints as SQL: the DDL re-executes to
+    # the same schema and the same partition directories
+    eng.sql("create table scp (d Date, v Int64) PARTITION BY toYYYYMM(d)")
+    ddl = eng.sql("show create table scp").first()["create_query"]
+    assert "PARTITION BY toYYYYMM(d)" in ddl
+    again = NutEngine(spark, data_dir=SF, catalog_dir=str(tmp_path / "again"))
+    again.sql(ddl)
+    rows = "(toDate('2024-01-05'), 1), (toDate('2024-03-09'), 2)"
+    layouts = []
+    for e in (eng, again):
+        e.sql(f"insert into scp values {rows}")
+        root = e.catalog._data_path("scp")
+        layouts.append(
+            (
+                e.sql("select * from scp").schema,
+                sorted(f for f in os.listdir(root) if "=" in f),
+            )
+        )
+    assert layouts[0] == layouts[1]
+    assert layouts[0][1] == ["__part=202401", "__part=202403"]
 
 
 def test_show_create_unknown_errors(spark, tmp_path):
