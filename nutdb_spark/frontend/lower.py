@@ -2587,6 +2587,50 @@ class Lowerer:
                 self._collect_aggs(v, out)
 
     def _lower_aggregate(self, base, q, agg_calls, scope):
+        """Lower a GROUP BY (or a global aggregate) as aggregate
+        families. A family is the set of calls that share one
+        aggregation over the same child; `_agg_family` classifies
+        every call:
+
+          main     — every call not in a side, in ONE aggregate; WITH
+                     ROLLUP / CUBE / TOTALS / GROUPING SETS expand
+                     inside it (Expand + map-side partials, never a
+                     union of re-scans).
+          distinct — the DISTINCT calls, split out when a heavy call
+                     stays in main (plain GROUP BY, no grouping()).
+                     Catalyst's RewriteDistinctAggregates plans the
+                     distinct calls through an Expand and drags every
+                     sibling's buffer through the extra aggregate level
+                     it inserts; a TypedImperative sibling (percentile,
+                     max_by, collect_set) then pays serialize/merge per
+                     level, which measured 3-5x the cost of the two
+                     pieces computed apart (sql_agg_if: 2.9 s as one
+                     aggregate vs 0.6 s + 0.4 s split at sf0.1).
+          topK     — one side per exact topK / groupArraySorted /
+                     quantileExact / entropy call (`_topk_side`): a
+                     (keys, value) pre-aggregate with map-side partials
+                     plus a bounded per-key top-k, never one
+                     collect_list per group (per-group state O(group
+                     rows): a single hot group OOMs a task at 100 TB).
+                     Under a modifier the one pre-aggregate serves
+                     every grouping set, because value counts are
+                     summable across dropped keys.
+
+        The keys are pre-projected under their __gN names once:
+        grouping(col) and GROUPING SETS match grouping columns by
+        expression equality, which aliased key expressions break, and
+        every side groups by the same plain columns. Each side joins
+        back onto main on null-safe key equality, plus the key-only
+        grouping id under a modifier, so a subtotal row never collides
+        with a detail row whose key IS NULL. A side reads the child
+        again, so sides are emitted only when the child is
+        deterministic; otherwise every call stays in main and the
+        child is read once.
+        """
+        from functools import reduce
+
+        from pyspark.sql.types import ArrayType
+
         group_map: dict[int, str] = {}
         group_cols: list[Column] = []
         # group keys may host pending broadcast joins (dictGet et al.):
@@ -2628,280 +2672,36 @@ class Lowerer:
             name = f"__g{i}"
             group_map[i] = name
             group_cols.append(self._expr(g, scope, {}, [], gpend).alias(name))
-        for pname, df, *rest in gpend:
-            cond = rest[0] if rest else None
-            if cond is None:
-                base = base.join(F.broadcast(df))
-            else:
-                base = base.join(df, cond, "left").drop(
-                    *[c for c in df.columns if c.startswith("__ck")]
-                )
-        # [EXT] heavy-hitter rewrite: exact topK/topKWeighted must NOT
-        # lower to one collect_list per group (per-group state would be
-        # O(group rows) — a single hot group OOMs a task at 100 TB).
-        # They instead lower to a pre-aggregate by (keys, value) —
-        # map-side partials shrink duplicates — plus a bounded per-key
-        # top-k, joined back onto the main aggregate. Under ROLLUP /
-        # CUBE / TOTALS / GROUPING SETS the ONE (keys, value)
-        # pre-aggregate serves every grouping set: value counts are
-        # summable across dropped keys, so each set's top-k re-derives
-        # from it with an Expand over the (small) distinct-value frame
-        # — never per-group row state, even for the grand-total row
-        # over a 100 TB fact. collect_list stays only where state is
-        # genuinely bounded (windowFunnel/sequenceMatch — one user's
-        # events).
-        modifier = getattr(q, "group_modifier", None)
-        group_sets = getattr(q, "group_sets", None)
-        topk_calls = [
-            (call, name)
-            for call, name in agg_calls
-            if (
-                call.params is not None
-                and call.name.lower()
-                in (
-                    "topk", "topkweighted", "grouparraysorted",
-                    "quantileexact", "quantileexactlow",
-                    "quantileexacthigh",
-                    # medianExact ≡ quantileExact(0.5), param-free
-                    "medianexact",
-                    # [EXT] -If compositions: last arg = condition,
-                    # applied as a filter on the level-1 pre-aggregate
-                    "topkif", "topkweightedif", "grouparraysortedif",
-                    "quantileexactif",
-                )
-            )
-            # entropy and medianExact are non-parametric but share the
-            # bounded (keys, value, cnt) pre-aggregate (medianExact ≡
-            # quantileExact(0.5); entropy needs only per-value counts)
-            or call.name.lower() in ("entropy", "medianexact")
+        base = self._join_pending(base, gpend)
+        names = list(group_map.values())
+        pre = base.select(F.col("*"), *group_cols) if group_cols else base
+        modified = q.group_modifier is not None or q.group_sets is not None
+        sets = (
+            self._grouping_sets_idx(q.group_modifier, q.group_sets, len(names))
+            if names
+            else None
+        )
+
+        family = {n: self._agg_family(c) for c, n in agg_calls}
+        # a keyless modifier keeps topK in main (the in-group form)
+        topk = [
+            (c, n)
+            for c, n in agg_calls
+            if family[n] == "topk" and (names or not modified)
         ]
-        if topk_calls and (
-            group_cols or (modifier is None and group_sets is None)
+        distinct = [(c, n) for c, n in agg_calls if family[n] == "distinct"]
+        if (
+            modified
+            or "heavy" not in family.values()
+            or any(c.name.lower() == "grouping" for c, _ in agg_calls)
         ):
-            return self._lower_aggregate_with_topk(
-                base, q, agg_calls, topk_calls, scope, group_map,
-                group_cols, resolved_groups,
-            )
-        # [EXT] mixed DISTINCT + heavyweight regular aggregates:
-        # Catalyst's RewriteDistinctAggregates plans every distinct
-        # group through an Expand and drags every SIBLING aggregate's
-        # buffer through the extra aggregate level it inserts — a
-        # TypedImperative sibling (percentile, max_by, collect_set)
-        # then pays serialize/merge per level, which measured 3-5x the
-        # cost of the two pieces computed apart (sql_agg_if: 2.9s one
-        # aggregate vs 0.6s + 0.4s split at sf0.1). Lower the two
-        # families as separate aggregations over the same child and
-        # join them back on null-safe key equality (the topk-side
-        # precedent): each plan is then the optimal one — the regular
-        # aggregates keep one map-side-partial hash aggregate, the
-        # distinct ones keep the Expand over cheap states only.
-        if modifier is None and group_sets is None:
-            dist_calls = [
-                (c, n) for c, n in agg_calls if self._is_distinct_agg(c)
-            ]
-            reg_calls = [
-                (c, n) for c, n in agg_calls if not self._is_distinct_agg(c)
-            ]
-            if (
-                dist_calls
-                and reg_calls
-                and any(self._is_heavy_agg(c) for c, _ in reg_calls)
-                and not any(
-                    c.name.lower() == "grouping" for c, _ in agg_calls
-                )
-            ):
-                return self._lower_aggregate_split(
-                    base, q, dist_calls, reg_calls, scope, group_map,
-                    group_cols, resolved_groups,
-                )
-        aggs: list[Column] = []
-        for call, name in agg_calls:
-            aggs.append(self._agg_expr(call, scope, q, group_map).alias(name))
-        if not aggs:
-            # GROUP BY with no aggregates → still needs an agg frame
-            aggs = [F.count(F.lit(1)).alias(self._gen("cnt"))]
-        # grouping(col) must reference the EXACT grouping expression;
-        # aliased key expressions break Catalyst's match, so when it
-        # appears the keys are pre-projected under their __g names and
-        # grouped as plain columns (the grouping-sets branch already
-        # does this unconditionally)
-        has_grouping = any(
-            c.name.lower() == "grouping" for c, _ in agg_calls
-        )
-        if group_cols:
-            # [EXT] WITH ROLLUP / WITH CUBE: Catalyst expands either
-            # to grouping sets inside ONE hash aggregate (map-side
-            # partial preserved) — no union of re-scans.
-            modifier = getattr(q, "group_modifier", None)
-            group_sets = getattr(q, "group_sets", None)
-            if group_sets is not None:
-                # [EXT] explicit GROUPING SETS — Spark 4 groupingSets()
-                # keeps every set inside ONE hash aggregate (same
-                # Expand+partial-agg shape as rollup/cube). It matches
-                # set members to grouping columns by expression
-                # equality, which aliased expressions break (every key
-                # comes back NULL) — so pre-project the key expressions
-                # under their __g names and group by the plain columns.
-                base = base.select(F.col("*"), *group_cols)
-                names = [group_map[i] for i in range(len(group_cols))]
-                sets = [[F.col(names[i]) for i in s] for s in group_sets]
-                grouped = base.groupingSets(sets, *[F.col(n) for n in names])
-            else:
-                gcols = group_cols
-                if has_grouping:
-                    base = base.select(F.col("*"), *group_cols)
-                    gcols = [
-                        F.col(group_map[i]) for i in range(len(group_cols))
-                    ]
-                if modifier in ("rollup", "totals"):
-                    grouped = base.rollup(*gcols)
-                elif modifier == "cube":
-                    grouped = base.cube(*gcols)
-                else:
-                    grouped = base.groupBy(*gcols)
-            if modifier == "totals":
-                # WITH TOTALS = grouping sets ((all keys), ()) — carve
-                # them out of the rollup via grouping_id (0 = detail,
-                # all-ones = grand total); still ONE hash aggregate,
-                # intermediate subtotal rows never materialize past the
-                # filter
-                gid = self._gen("gid")
-                base = grouped.agg(*aggs, F.grouping_id().alias(gid))
-                all_ones = (1 << len(group_cols)) - 1
-                base = base.filter(
-                    F.col(gid).isin(0, all_ones)
-                ).drop(gid)
-            else:
-                base = grouped.agg(*aggs)
-        else:
-            base = base.agg(*aggs)
-        return base, {"groups": resolved_groups, "names": group_map}
-
-    @staticmethod
-    def _is_distinct_agg(call) -> bool:
-        """True when the call lowers to a Spark DISTINCT aggregate
-        (count_distinct / sum_distinct — the forms that trigger
-        RewriteDistinctAggregates). Name-based: the combinator
-        generator composes wrappers around the same bases, so the base
-        name survives as the prefix. -Array forms are collect_set
-        reductions, never distinct aggregates."""
-        low = call.name.lower()
-        if getattr(call, "distinct", False):
-            return low in ("count", "sum")
-        if "array" in low:
-            return False
-        return low.startswith(
-            (
-                "uniqexact", "countunique", "countdistinct",
-                "sumdistinct", "avgdistinct", "uniqupto",
-            )
-        ) and not low.startswith("countuniqueapprox")
-
-    @staticmethod
-    def _is_heavy_agg(call) -> bool:
-        """True for TypedImperative-buffer aggregates whose state is
-        expensive to re-serialize through the distinct rewrite's extra
-        aggregate level (percentile maps, max_by/min_by structs,
-        collect_list/collect_set arrays)."""
-        low = call.name.lower()
-        return any(
-            m in low
-            for m in (
-                "median", "quantile", "argmax", "argmin",
-                "grouparray", "groupuniqarray", "histogram",
-            )
-        )
-
-    def _lower_aggregate_split(
-        self, base, q, dist_calls, reg_calls, scope, group_map,
-        group_cols, resolved_groups,
-    ):
-        """Two aggregations over the same child — regular aggregates in
-        one map-side-partial hash aggregate, distinct aggregates in
-        their own Expand-bearing aggregate — joined back on null-safe
-        key equality (see the dispatch comment in _lower_aggregate)."""
-        from functools import reduce
-
-        names = [group_map[i] for i in range(len(group_cols))]
-        pre = base.select(F.col("*"), *group_cols) if group_cols else base
-
-        def agg_frame(calls):
-            aggs = [
-                self._agg_expr(call, scope, q, group_map).alias(name)
-                for call, name in calls
-            ]
-            if names:
-                return pre.groupBy(*[F.col(n) for n in names]).agg(*aggs)
-            return pre.agg(*aggs)
-
-        main = agg_frame(reg_calls)
-        side = agg_frame(dist_calls)
-        if names:
-            renamed = side.select(
-                *[F.col(n).alias(f"__ds_{n}") for n in names],
-                *[F.col(nm) for _, nm in dist_calls],
-            )
-            cond = reduce(
-                Column.__and__,
-                [
-                    main[n].eqNullSafe(renamed[f"__ds_{n}"])
-                    for n in names
-                ],
-            )
-            # inner join: both sides aggregate the identical child over
-            # the identical keys, so the key sets are equal by
-            # construction.
-            out = main.join(renamed, cond).drop(
-                *[f"__ds_{n}" for n in names]
-            )
-        else:
-            out = main.crossJoin(side)  # two global 1-row frames
-        return out, {"groups": resolved_groups, "names": group_map}
-
-    def _lower_aggregate_with_topk(
-        self, base, q, agg_calls, topk_calls, scope, group_map,
-        group_cols, resolved_groups=None,
-    ):
-        """Two-level lowering for exact topK/topKWeighted (see the
-        dispatch comment in _lower_aggregate):
-
-          level 1: groupBy(keys, value) → count / sum(weight) — the
-                   hash aggregate gets map-side partials, so per-task
-                   state is O(distinct values in the task), never
-                   O(rows);
-          level 2: per-key top-k over the (value, cnt) rows — a
-                   row_number window (sort-based, SPILLABLE — the
-                   property collect_list lacks) for grouped queries, a
-                   TakeOrdered limit for the global form;
-          then the ≤k survivors per key fold into the result array
-          (count desc, value asc — the same deterministic tie-break as
-          the in-group form) and join back onto the main aggregate on
-          null-safe key equality.
-
-        Under ROLLUP / CUBE / WITH TOTALS / GROUPING SETS the level-1
-        pre-aggregate is computed ONCE over the full keys, then every
-        grouping set's (value, count) frame re-derives from it by an
-        Expand + sum (counts are summable across dropped keys); output
-        rows are identified by (keys, grouping-bits) so a subtotal row
-        (NULL from grouping) never collides with a detail row whose key
-        value IS NULL.
-        """
-        from functools import reduce
-
-        names = [group_map[i] for i in range(len(group_cols))]
-        pre = base.select(F.col("*"), *group_cols) if group_cols else base
-        topk_names = {n for _, n in topk_calls}
-        other_aggs = [
-            self._agg_expr(call, scope, q, group_map).alias(name)
-            for call, name in agg_calls
-            if name not in topk_names
-        ]
-        if not other_aggs:
-            other_aggs = [F.count(F.lit(1)).alias(self._gen("cnt"))]
-        modifier = getattr(q, "group_modifier", None)
-        group_sets = getattr(q, "group_sets", None)
-        sets_idx = self._grouping_sets_idx(modifier, group_sets, len(names))
-        gid = self._gen("tkgid") if sets_idx is not None else None
+            distinct = []
+        if (topk or distinct) and not (
+            pre._jdf.queryExecution().analyzed().deterministic()
+        ):
+            topk, distinct = [], []
+        in_side = {n for _, n in topk + distinct}
+        gid = self._gen("gid") if sets is not None and topk else None
 
         def gid_bits():
             # key-only grouping id (first key = most significant bit);
@@ -2912,81 +2712,92 @@ class Lowerer:
                 bits = F.shiftleft(bits, 1) + F.grouping(F.col(n)).cast("int")
             return bits
 
-        if sets_idx is not None:
-            name_cols = [F.col(n) for n in names]
-            if group_sets is not None:
-                grouped = pre.groupingSets(
-                    [[name_cols[i] for i in s] for s in group_sets],
-                    *name_cols,
-                )
-            elif modifier in ("rollup", "totals"):
-                grouped = pre.rollup(*name_cols)
+        def aggregate(calls, extra=()):
+            # a GROUP BY with no aggregates still needs an agg frame
+            aggs = [
+                self._agg_expr(c, scope, q, group_map).alias(n)
+                for c, n in calls
+            ] or [F.count(F.lit(1)).alias(self._gen("cnt"))]
+            cols = [F.col(n) for n in names]
+            if sets is None:
+                grouped = pre.groupBy(*cols)
             else:
-                grouped = pre.cube(*name_cols)
-            main = grouped.agg(*other_aggs, gid_bits().alias(gid))
-            if modifier == "totals":
-                all_ones = (1 << len(names)) - 1
-                main = main.filter(F.col(gid).isin(0, all_ones))
-        elif names:
-            main = pre.groupBy(*[F.col(n) for n in names]).agg(*other_aggs)
-        else:
-            main = pre.agg(*other_aggs)
-        for call, name in topk_calls:
+                grouped = pre.groupingSets(
+                    [[cols[i] for i in s] for s in sets], *cols
+                )
+            return grouped.agg(*aggs, *extra)
+
+        out = aggregate(
+            [(c, n) for c, n in agg_calls if n not in in_side],
+            [gid_bits().alias(gid)] if gid else [],
+        )
+        keys = names + ([gid] if gid else [])
+        sides = []
+        if distinct:
+            sides.append((aggregate(distinct), [n for _, n in distinct]))
+        for c, n in topk:
             side = self._topk_side(
-                pre, names, call, scope, name,
-                sets_idx=sets_idx, gid=gid, gid_bits=gid_bits,
+                pre, names, c, scope, n,
+                sets_idx=sets, gid=gid, gid_bits=gid_bits,
             )
-            arr_type = side.schema[name].dataType
-            if names:
-                tk_cols = names + ([gid] if gid else [])
+            sides.append((side, [n]))
+        for side, cols in sides:
+            if keys:
                 renamed = side.select(
-                    *[F.col(n).alias(f"__tk_{n}") for n in tk_cols],
-                    F.col(name),
+                    *[F.col(k).alias(f"__s_{k}") for k in keys],
+                    *[F.col(c) for c in cols],
                 )
                 cond = reduce(
                     Column.__and__,
-                    [
-                        main[n].eqNullSafe(renamed[f"__tk_{n}"])
-                        for n in tk_cols
-                    ],
+                    [out[k].eqNullSafe(renamed[f"__s_{k}"]) for k in keys],
                 )
-                main = (
-                    main.join(renamed, cond, "left")
-                    .drop(*[f"__tk_{n}" for n in tk_cols])
+                out = out.join(renamed, cond, "left").drop(
+                    *[f"__s_{k}" for k in keys]
                 )
             else:
-                main = main.crossJoin(F.broadcast(side))
-            # a group whose values were all NULL has no level-1 rows:
-            # [] like the in-group form for the array aggregates, NULL
-            # for the scalar quantileExact family
-            from pyspark.sql.types import ArrayType
-
-            if isinstance(arr_type, ArrayType):
-                main = main.withColumn(
-                    name,
-                    F.when(F.col(name).isNull(), F.array().cast(arr_type))
-                    .otherwise(F.col(name)),
-                )
+                out = out.crossJoin(F.broadcast(side))  # 1-row frames
+            for n in cols:
+                # a topK side has no row for a group whose values were
+                # all NULL: [] like the in-group form for the array
+                # aggregates, NULL for the scalar quantileExact family
+                arr_type = side.schema[n].dataType
+                if isinstance(arr_type, ArrayType):
+                    out = out.withColumn(
+                        n,
+                        F.when(F.col(n).isNull(), F.array().cast(arr_type))
+                        .otherwise(F.col(n)),
+                    )
         if gid is not None:
-            main = main.drop(gid)
-        return main, {
-            "groups": (
-                resolved_groups if resolved_groups is not None
-                else q.group_by
-            ),
-            "names": group_map,
-        }
+            out = out.drop(gid)
+        return out, {"groups": resolved_groups, "names": group_map}
+
+    @staticmethod
+    def _agg_family(call) -> str:
+        """'topk', 'distinct', 'heavy' or 'plain' for one aggregate
+        call: the first `_AGG_FAMILIES` row that matches its lowercased
+        name. fn(DISTINCT …) is 'distinct' whatever the name."""
+        low = call.name.lower()
+        if call.distinct:
+            return "distinct"
+        for fam, test, parametric, words, unless in _AGG_FAMILIES:
+            if (
+                (call.params is not None or not parametric)
+                and any(test(low, w) for w in words)
+                and not any(u in low for u in unless)
+            ):
+                return fam
+        return "plain"
 
     @staticmethod
     def _grouping_sets_idx(modifier, group_sets, n):
         """Expand a GROUP BY modifier into explicit key-index sets
-        (None for a plain GROUP BY). Used only to re-derive each set's
-        top-k from the shared (keys, value) pre-aggregate."""
+        (None for a plain GROUP BY). The main aggregate and every topK
+        side group by these same sets."""
         if group_sets is not None:
             return [list(s) for s in group_sets]
         if modifier == "totals":
-            # TOTALS emits only (all keys, ()) — the side Expand need
-            # not produce the intermediate rollup prefixes at all
+            # WITH TOTALS = grouping sets ((all keys), ()): the detail
+            # rows and the grand total, no intermediate rollup prefixes
             return [list(range(n)), []]
         if modifier == "rollup":
             return [list(range(i)) for i in range(n, -1, -1)]
@@ -3004,16 +2815,24 @@ class Lowerer:
         self, pre, names, call, scope, out_name,
         sets_idx=None, gid=None, gid_bits=None,
     ):
+        """One topK-family call as its own frame over `pre`, one row
+        per key (plus `gid` under grouping sets):
+
+          level 1: groupBy(keys, value) → count / sum(weight) — the
+                   hash aggregate gets map-side partials, so per-task
+                   state is O(distinct values in the task), never
+                   O(rows); under grouping sets one Expand over this
+                   distinct-value frame re-sums every set's counts;
+          level 2: per-key top-k over the (value, cnt) rows — a
+                   row_number window (sort-based, spillable, the
+                   property collect_list lacks) for grouped queries, a
+                   TakeOrdered limit for the global form — folded into
+                   the result array (count desc, value asc: the same
+                   tie-break as the in-group form); quantileExact and
+                   entropy read the level-1 histogram instead."""
         from pyspark.sql import Window
 
-        params = []
-        for p in call.params or []:
-            if not isinstance(p, A.Lit):
-                raise LoweringError(
-                    "parametric aggregate parameters must be "
-                    "constant literals"
-                )
-            params.append(p.value)
+        params = self._literal_params(call)
         name_l = call.name.lower()
         is_if = name_l.endswith("if") and name_l != "quantileexact"
         if is_if:
@@ -3206,12 +3025,31 @@ class Lowerer:
             )
         return self._lower_agg_call(call, scope)
 
+    @staticmethod
+    def _literal_params(call: A.FnCall) -> list:
+        """The values of a parametric call's fn(params): each must be a
+        constant literal."""
+        params = []
+        for p in call.params or []:
+            if not isinstance(p, A.Lit):
+                raise LoweringError(
+                    "parametric aggregate parameters must be "
+                    "constant literals"
+                )
+            params.append(p.value)
+        return params
+
     def _lower_agg_call(self, call: A.FnCall, scope: Scope) -> Column:
         from nutdb_spark.functions.registry import resolve
 
+        low = call.name.lower()
+        if call.distinct and low not in ("count", "sum"):
+            # [EXT] fn(DISTINCT args) — standard distinct aggregates
+            raise LoweringError(
+                f"DISTINCT is supported for count/sum, not {call.name!r}"
+            )
         if call.params is not None:
             # [EXT] parametric aggregate fn(params)(args)
-            low = call.name.lower()
             pfn = next(
                 (f for k, f in PARAMETRIC_AGGS.items() if k.lower() == low),
                 None,
@@ -3220,16 +3058,8 @@ class Lowerer:
                 raise LoweringError(
                     f"function {call.name!r} is not parametric"
                 )
-            params = []
-            for p in call.params:
-                if not isinstance(p, A.Lit):
-                    raise LoweringError(
-                        "parametric aggregate parameters must be "
-                        "constant literals"
-                    )
-                params.append(p.value)
             args = [self._expr(a, scope, {}, []) for a in call.args]
-            return pfn(params, *args)
+            return pfn(self._literal_params(call), *args)
         try:
             fn, _ = resolve(call.name)
         except KeyError as ex:
@@ -3240,16 +3070,10 @@ class Lowerer:
         if not call.args or isinstance(call.args[0], A.Wildcard):
             return F.count(F.lit(1))
         args = [self._expr(a, scope, {}, []) for a in call.args]
-        if getattr(call, "distinct", False):
-            # [EXT] fn(DISTINCT args) — standard distinct aggregates
-            low = call.name.lower()
+        if call.distinct:
             if low == "count":
                 return F.count_distinct(*args)
-            if low == "sum":
-                return F.sum_distinct(args[0])
-            raise LoweringError(
-                f"DISTINCT is supported for count/sum, not {call.name!r}"
-            )
+            return F.sum_distinct(args[0])
         return fn(*args)
 
     # --- expressions ------------------------------------------------------
@@ -3259,20 +3083,26 @@ class Lowerer:
         into `base` as broadcast 1-row frames first."""
         pending: list[tuple] = []
         col = self._expr(e, scope, group_map, agg_calls, pending)
-        for name, df, *rest in pending:
+        return col, self._join_pending(base, pending)
+
+    @staticmethod
+    def _join_pending(base, pending):
+        """Attach the frames an expression left in `pending`: a frame
+        without a condition (an uncorrelated scalar's 1-row aggregate)
+        by broadcast cross join; a per-key frame (correlated scalar,
+        dictGet) by LEFT join on its condition (missing key → NULL, per
+        SQL), its __ck key columns dropped. A correlated scalar's join
+        strategy is left to Catalyst/AQE — its frame is one row per
+        distinct key, not always broadcastable."""
+        for _, df, *rest in pending:
             cond = rest[0] if rest else None
             if cond is None:
                 base = base.join(F.broadcast(df))
             else:
-                # correlated scalar: per-key frame, LEFT join on the
-                # correlation keys (missing key → NULL, per SQL).
-                # Join strategy is left to Catalyst/AQE — the frame is
-                # one row per distinct correlation key, not always
-                # broadcastable.
                 base = base.join(df, cond, "left").drop(
                     *[c for c in df.columns if c.startswith("__ck")]
                 )
-        return col, base
+        return base
 
     def _expr(self, e, scope, group_map, agg_calls, pending=None) -> Column:
         # group-key structural substitution
@@ -3925,6 +3755,52 @@ def _refs_table(node, name: str) -> bool:
 _AGG_NAMES = {n.lower() for n in AGGREGATE_FNS} | {
     n.lower() for n in PARAMETRIC_AGGS
 }
+
+# Aggregate families for Lowerer._lower_aggregate, one rule per row:
+# (family, name test, only in the fn(params)(args) form, words,
+# unless). The first row whose test holds for the lowercased call name
+# and one of its words, and whose name holds none of its `unless`
+# words, gives the family; no row means 'plain'.
+_AGG_FAMILIES = (
+    # exact heavy-hitter / order-statistic aggregates lowered as a
+    # bounded (keys, value, cnt) side (_topk_side); the -If forms take
+    # their condition as the last argument
+    (
+        "topk", str.__eq__, True,
+        (
+            "topk", "topkweighted", "grouparraysorted", "quantileexact",
+            "quantileexactlow", "quantileexacthigh", "topkif",
+            "topkweightedif", "grouparraysortedif", "quantileexactif",
+        ),
+        (),
+    ),
+    # medianExact ≡ quantileExact(0.5), and entropy needs only the
+    # per-value counts: the same side, without parameters
+    ("topk", str.__eq__, False, ("medianexact", "entropy"), ()),
+    # aggregates that lower to a Spark DISTINCT aggregate (planned by
+    # RewriteDistinctAggregates). Prefixes, because the combinator
+    # generator composes wrappers around the same bases; the -Array
+    # forms are collect_set reductions and countUniqueApprox a sketch
+    (
+        "distinct", str.startswith, False,
+        (
+            "uniqexact", "countunique", "countdistinct", "sumdistinct",
+            "avgdistinct", "uniqupto",
+        ),
+        ("array", "countuniqueapprox"),
+    ),
+    # TypedImperative-buffer aggregates whose state is costly to
+    # re-serialize through the distinct rewrite's extra aggregate
+    # level (percentile maps, max_by/min_by structs, collect_* arrays)
+    (
+        "heavy", str.__contains__, False,
+        (
+            "median", "quantile", "argmax", "argmin", "grouparray",
+            "groupuniqarray", "histogram",
+        ),
+        (),
+    ),
+)
 
 # fn name (lowercased) -> 0-based arg positions that must be string
 # LITERALS passed through raw (not lowered to Columns): Spark's

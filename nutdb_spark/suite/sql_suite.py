@@ -1518,10 +1518,11 @@ def sql_topk_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (keys, value) pre-aggregate — value counts are summable across
     dropped keys, so the subtotal's heavy hitters cost one Expand over
     the distinct-value frame plus a bounded spillable window, never a
-    collect_list of a 100 TB group's raw rows (frontend/lower.py
-    _lower_aggregate_with_topk; tests/test_advice_r8.py pins the hot
-    -group plan). The oracle mirrors the re-sum: per-key counts UNION
-    ALL their value-wise rollup."""
+    collect_list of a 100 TB group's raw rows (the topK side of
+    frontend/lower.py _lower_aggregate, built by _topk_side;
+    tests/test_advice_r8.py pins the hot-group plan). The oracle
+    mirrors the re-sum: per-key counts UNION ALL their value-wise
+    rollup."""
     return _run(
         spark,
         sf_dir,

@@ -492,8 +492,9 @@ def test_session6_scalar_entries_are_pure_projections(spark):
 
 def test_agg_combinators_bounded_exchanges(spark):
     """sql_agg_combinators mixes DISTINCT aggregates with
-    TypedImperative plain ones, so the r14 split lowering plans TWO
-    aggregations over the same scan — the regular aggregates in one
+    TypedImperative plain ones, so the GROUP BY lowering splits the
+    distinct calls into their own family: TWO aggregations over the
+    same scan — the regular aggregates in one
     map-side-partial hash aggregate with NO Expand, the distinct ones
     in their own Expand-bearing branch — joined back by BROADCAST on
     the group key (3 grouping values), plus the ORDER BY range
@@ -509,6 +510,20 @@ def test_agg_combinators_bounded_exchanges(spark):
     assert "SortAggregate" not in plan
     assert "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_agg_if_split_shape(spark):
+    """sql_agg_if (uniqExactIf next to argMaxIf / groupUniqArrayIf /
+    medianIf) is the benchmark's split statement: the distinct calls
+    form their own family, so the plan holds the one Expand of their
+    own aggregation, joins the two aggregations back by broadcast, and
+    never drags the heavy buffers through a SortAggregate."""
+    from nutdb_spark.suite import QUERIES
+
+    plan = plan_of(QUERIES["sql_agg_if"](spark, SF01))
+    assert plan.count("Expand") == 1
+    assert "BroadcastHashJoin" in plan
+    assert "SortAggregate" not in plan
 
 
 def test_pq_adc_no_cartesian_and_broadcast_rescore(spark):
