@@ -22,6 +22,9 @@ constraints, Enum membership, DEFAULT fill-in, Serial generation.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import functools
 import json
 import os
 import shutil
@@ -118,9 +121,10 @@ _COMMIT = ".commit-"
 
 def _entry(parent: str, cid: str, role: str) -> str:
     """A commit's own name in ``parent``: ``new`` (staged entries),
-    ``old`` (live entries moved aside) or ``plan`` (its journal).
-    Dot-prefixed, so Spark's file index skips it, and never ending in
-    ``.json``, so no listing takes it for a sidecar."""
+    ``old`` (live entries moved aside), ``plan`` (its journal) or
+    ``lock`` (held by the owner while the commit lives). Dot-prefixed,
+    so Spark's file index skips it, and never ending in ``.json``, so
+    no listing takes it for a sidecar."""
     return os.path.join(parent, f"{_COMMIT}{cid}-{role}")
 
 
@@ -135,11 +139,44 @@ def _remove(path: str) -> None:
         os.remove(path)
 
 
+@contextlib.contextmanager
+def _claim(parent: str):
+    """Own a fresh commit id in ``parent`` for the life of the block.
+
+    The owner holds an exclusive ``flock`` on ``.commit-<id>-lock``,
+    made before any other entry of the commit, and :func:`recover`
+    passes over a commit whose lock is held, in this process or
+    another. The lock file is deleted on the way out unless entries of
+    the commit are left (a cleanup failed), so the next recover, which
+    finds the lock free, drops them."""
+    while True:
+        cid = uuid.uuid4().hex
+        lock = _entry(parent, cid, "lock")
+        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        if os.fstat(fd).st_nlink:
+            break
+        # a recover took the still-empty claim for a dead one and
+        # deleted it before the lock was ours
+        os.close(fd)
+    try:
+        yield cid
+    finally:
+        roles = ("new", "old", "plan")
+        if not any(os.path.lexists(_entry(parent, cid, r)) for r in roles):
+            with contextlib.suppress(OSError):
+                os.remove(lock)
+        os.close(fd)
+
+
 def commit(parent: str, names: list[str], write=None) -> None:
     """Replace or remove the entries ``names`` of directory ``parent``
-    as one unit. ``write(staged)`` writes the new contents of each
-    entry at ``staged/<name>``; an entry it does not write (every
-    entry when ``write`` is None) is removed. The steps:
+    as one unit. A name may be a path below ``parent`` (a partition
+    directory or a part file of a table). ``write(staged)`` writes the
+    new contents of each entry at ``staged/<name>`` and may return more
+    names, of entries it staged that only it could name; an entry it
+    does not write (every entry when ``write`` is None) is removed. The
+    steps:
 
     1. ``write`` stages the new entries in ``.commit-<id>-new``;
     2. the journal ``.commit-<id>-plan`` records each name and whether
@@ -154,35 +191,42 @@ def commit(parent: str, names: list[str], write=None) -> None:
     deleting after the commit point is not raised: the next
     :func:`recover` drops the leftovers. ``Catalog`` runs ``recover``
     over its root and each object directory when it opens, so what a
-    killed process leaves is rolled back (journal present) or dropped.
+    killed process leaves is rolled back (journal present) or dropped;
+    the commit's lock (:func:`_claim`) keeps it off a commit whose
+    owner is alive.
 
-    Out of scope: an INSERT moves its files into the live directory one
-    by one (an atomic append needs a file manifest); a streaming sink's
-    state outside a catalog is never swept; concurrent writers get
-    nothing beyond unique staging names, and a catalog opened while
-    another process commits into it rolls that commit back."""
-    cid = uuid.uuid4().hex
-    new, old, plan = (_entry(parent, cid, r) for r in ("new", "old", "plan"))
-    try:
-        os.makedirs(new)
-        if write is not None:
-            write(new)
-        _dump(plan, {n: os.path.lexists(os.path.join(parent, n)) for n in names})
-        os.makedirs(old)
-        for n in names:
-            if os.path.lexists(os.path.join(parent, n)):
-                _move(os.path.join(parent, n), os.path.join(old, n))
-        for n in names:
-            if os.path.lexists(os.path.join(new, n)):
-                _move(os.path.join(new, n), os.path.join(parent, n))
-        os.remove(plan)
-    except BaseException:
-        _finish(parent, cid)
-        raise
-    try:
-        _finish(parent, cid)
-    except OSError:
-        pass  # committed; recover() drops the leftovers
+    A statement that writes a table commits the table's new entries
+    (its data directory, or an INSERT's new part files) and what it
+    changes in every view derived from it here, as one unit.
+
+    Out of scope: a streaming sink's state outside a catalog is never
+    swept; concurrent writers of one entry get nothing beyond unique
+    staging names (the last commit wins)."""
+    with _claim(parent) as cid:
+        new, old, plan = (_entry(parent, cid, r) for r in ("new", "old", "plan"))
+        try:
+            os.makedirs(new)
+            if write is not None:
+                names = [*names, *(write(new) or ())]
+            _dump(plan, {n: os.path.lexists(os.path.join(parent, n)) for n in names})
+            for n in names:
+                if os.path.lexists(os.path.join(parent, n)):
+                    aside = os.path.join(old, n)
+                    os.makedirs(os.path.dirname(aside), exist_ok=True)
+                    _move(os.path.join(parent, n), aside)
+            for n in names:
+                if os.path.lexists(os.path.join(new, n)):
+                    live = os.path.join(parent, n)
+                    os.makedirs(os.path.dirname(live), exist_ok=True)
+                    _move(os.path.join(new, n), live)
+            os.remove(plan)
+        except BaseException:
+            _finish(parent, cid)
+            raise
+        try:
+            _finish(parent, cid)
+        except OSError:
+            pass  # committed; recover() drops the leftovers
 
 
 def _finish(parent: str, cid: str) -> None:
@@ -208,14 +252,97 @@ def _finish(parent: str, cid: str) -> None:
 
 
 def recover(parent: str) -> None:
-    """Finish every commit a killed process left in ``parent``."""
+    """Finish every commit in ``parent`` whose owner is gone: its lock
+    file is left and no process holds the lock. A commit whose lock is
+    held is live and left alone."""
     cids = {
         f[len(_COMMIT):].split("-", 1)[0]
         for f in os.listdir(parent)
         if f.startswith(_COMMIT)
     }
     for cid in cids:
-        _finish(parent, cid)
+        lock = _entry(parent, cid, "lock")
+        try:
+            fd = os.open(lock, os.O_WRONLY)
+        except FileNotFoundError:
+            continue  # its owner finished and deleted the lock last
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            os.close(fd)
+            continue  # live
+        try:
+            _finish(parent, cid)
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(lock)  # a second recover may have been first
+        finally:
+            os.close(fd)
+
+
+def _move_files(src: str, dst: str) -> list[str]:
+    """Move the parquet files under ``src`` into ``dst``, keeping
+    partition subdirectories; returns their new paths. Part-file names
+    carry write-unique ids, so moves into a live table never collide."""
+    moved = []
+    for root, _dirs, files in os.walk(src):
+        rel = os.path.relpath(root, src)
+        dst_dir = dst if rel == "." else os.path.join(dst, rel)
+        for f in files:
+            if f.endswith(".parquet"):
+                os.makedirs(dst_dir, exist_ok=True)
+                os.rename(os.path.join(root, f), os.path.join(dst_dir, f))
+                moved.append(os.path.join(dst_dir, f))
+    return moved
+
+
+def _lowerer_over(low, table: str, frame: DataFrame):
+    """A lowerer like ``low`` that reads ``frame`` for ``table``."""
+    from nutdb_spark.frontend.lower import Lowerer
+
+    def resolve(name: str) -> DataFrame:
+        return frame if name == table else low.resolve_table(name)
+
+    return Lowerer(
+        low.spark, resolve, low.params, config=low.config,
+        list_tables=low.list_tables,
+    )
+
+
+def _deterministic(df: DataFrame) -> bool:
+    return df._jdf.queryExecution().analyzed().deterministic()
+
+
+def _run_beside(jobs) -> list:
+    """Run ``jobs[0]`` in this thread and each other job in a
+    ``pyspark.InheritableThread``, whose Spark jobs therefore carry this
+    thread's job group and local properties. Every job is joined before
+    the first error is raised; returns the jobs' results in order."""
+    from pyspark import InheritableThread
+
+    results: list = [None] * len(jobs)
+    errors: list[BaseException] = []
+
+    def guard(i: int) -> None:
+        try:
+            results[i] = jobs[i]()
+        except BaseException as e:  # raised below, once all are joined
+            errors.append(e)
+
+    threads = [
+        InheritableThread(functools.partial(guard, i))
+        for i in range(1, len(jobs))
+    ]
+    for t in threads:
+        t.start()
+    try:
+        if jobs:
+            results[0] = jobs[0]()
+    finally:
+        for t in threads:
+            t.join()
+    if errors:
+        raise errors[0]
+    return results
 
 
 # --- incremental-view eligibility (S7) ------------------------------------
@@ -358,13 +485,14 @@ class Catalog:
     def _save_meta(self, name: str, meta: dict) -> None:
         """Write a sibling, then move it over the sidecar: a failed
         write leaves the previous sidecar in place."""
-        tmp = _entry(self.root, uuid.uuid4().hex, "new")
-        try:
-            _dump(tmp, meta)
-            os.replace(tmp, self._meta_path(name))
-        except BaseException:
-            _remove(tmp)
-            raise
+        with _claim(self.root) as cid:
+            tmp = _entry(self.root, cid, "new")
+            try:
+                _dump(tmp, meta)
+                os.replace(tmp, self._meta_path(name))
+            except BaseException:
+                _remove(tmp)
+                raise
 
     def objects(self):
         """Every catalog object's sidecar, in name order."""
@@ -510,7 +638,11 @@ class Catalog:
 
     def _write_table(self, df: DataFrame, path: str, meta: dict, low) -> None:
         """Write ``df`` at ``path`` in the table's declared layout:
-        PARTITION BY directories, ORDER BY clustering."""
+        PARTITION BY directories, ORDER BY clustering. Every write of
+        table data goes through here. The sort leads with the partition
+        columns, so it already meets the writer's required ordering and
+        the writer adds no sort of its own that would drop the ORDER BY
+        clustering inside each partition."""
         part_cols: list[str] = []
         if meta["partition_by"]:
             pe = Parser(meta["partition_by"]).parse_expr()
@@ -519,8 +651,8 @@ class Catalog:
             else:
                 df = df.withColumn("__part", low._expr(pe, None, {}, []))
                 part_cols = ["__part"]
-        if meta["order_by"]:
-            df = df.sortWithinPartitions(*meta["order_by"])
+        if part_cols or meta["order_by"]:
+            df = df.sortWithinPartitions(*part_cols, *(meta["order_by"] or []))
         writer = df.write.mode("overwrite")
         if part_cols:
             writer = writer.partitionBy(*part_cols)
@@ -542,26 +674,97 @@ class Catalog:
         )
 
     def read_table(self, name: str) -> DataFrame:
-        meta = self._load_meta(name)
-        path = self._data_path(name)
+        return self._read_data(self._data_path(name), self._load_meta(name))
+
+    def _read_data(self, path: str, meta: dict) -> DataFrame:
+        """A table data directory, read with the schema its sidecar
+        stores. The directories of an expression PARTITION BY
+        (``__part=<value>``) hold data; the column they add is not the
+        table's."""
+        schema = self._schema(meta)
         if not any(
-            not f.startswith(("_", ".")) for f in os.listdir(path)
+            f.startswith("__part=") or not f.startswith(("_", "."))
+            for f in os.listdir(path)
         ):
-            return self.spark.createDataFrame([], self._schema(meta))
-        return self.spark.read.schema(self._schema(meta)).parquet(path)
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(path).select(*schema.names)
 
     # --- INSERT (S2-S4) ---------------------------------------------------
 
     def insert(self, stmt: A.InsertStmt, low) -> None:
+        """Append rows in one commit: the new part files, the sidecar
+        (serial counters) and every materialized view over the table.
+        An incremental view merges ONLY the inserted rows into the
+        buckets they touch (streaming/summing.py); any other view is
+        derived again from the table with the rows appended. When the
+        rows' plan is deterministic the view jobs run beside the rows'
+        write over the same plan; otherwise they read the written files
+        (re-planning serial ids could draw them differently; the
+        written bytes can't change)."""
         meta = self._load_meta(stmt.table)
         if meta is None or meta["type"] != "table":
             raise CatalogError(f"unknown table {stmt.table!r}")
+        table = stmt.table
+        rows, serials, release = self._new_rows(
+            self._insert_source(stmt, meta, low), meta, low
+        )
+        checked, check = self._observed(rows, meta, low)
+        views = self._materialized_views(table)
+
+        cols = [c["name"] for c in meta["columns"]]
+
+        def view_jobs(delta: DataFrame, staged: str) -> list:
+            jobs, whole = [], None
+            for m in views:
+                if m.get("maintenance") == "incremental":
+                    job = self._delta_job(m, table, delta, low)
+                else:
+                    if whole is None:
+                        appended = self.read_table(table).select(*cols)
+                        appended = appended.unionByName(delta.select(*cols))
+                        whole = _lowerer_over(low, table, appended)
+                    job = self._view_job(m, whole)
+                jobs.append(functools.partial(job, staged))
+            return jobs
+
+        def write(staged: str) -> list[str]:
+            path = os.path.join(staged, ".rows")
+            write_rows = functools.partial(
+                self._write_table, checked, path, meta, low
+            )
+            try:
+                if views and _deterministic(rows):
+                    jobs = [write_rows, *view_jobs(rows, staged)]
+                    touched = _run_beside(jobs)[1:]
+                    check()
+                else:
+                    write_rows()
+                    check()
+                    touched = (
+                        _run_beside(view_jobs(self._read_data(path, meta), staged))
+                        if views
+                        else []
+                    )
+            finally:
+                release()
+            files = _move_files(path, os.path.join(staged, table))
+            meta["serial_next"] = serials
+            _dump(os.path.join(staged, table + ".json"), meta)
+            return [
+                *(os.path.relpath(f, staged) for f in files),
+                table + ".json",
+                *(n for names in touched for n in names),
+            ]
+
+        commit(self.root, [], write)
+
+    def _insert_source(self, stmt: A.InsertStmt, meta: dict, low) -> DataFrame:
+        """The INSERT's rows, one column per target column."""
         kind, payload = stmt.source
         col_meta = meta["columns"]
         declared = [c["name"] for c in col_meta]
-        serial_cols = [c["name"] for c in col_meta if c["serial"]]
         target_cols = stmt.columns or [
-            c for c in declared if c not in serial_cols
+            c["name"] for c in col_meta if not c["serial"]
         ]
         for c in target_cols:
             if c not in declared:
@@ -575,9 +778,9 @@ class Catalog:
             # made every downstream job (validation aggregate, write)
             # plan and run N branches.) Cells are cast to the DECLARED
             # column type here so every struct is same-typed (the
-            # array() requirement); the staged-output projection below
-            # applies the identical cast, so this is the same coercion
-            # one step earlier, not a new one.
+            # array() requirement); the staged-output projection in
+            # _write_rows applies the identical cast, so this is the
+            # same coercion one step earlier, not a new one.
             types_by_name = {
                 c["name"]: _parse_type(c["spark_type"]) for c in col_meta
             }
@@ -597,35 +800,41 @@ class Catalog:
                     for cell, n in zip(row, target_cols)
                 ]
                 row_structs.append(F.struct(*vals))
-            src = self.spark.range(1).select(
-                F.inline(F.array(*row_structs))
-            )
-        elif kind == "query":
+            return self.spark.range(1).select(F.inline(F.array(*row_structs)))
+        if kind == "query":
             src = low.lower_query(payload)
-            if len(src.columns) != len(target_cols):
-                raise CatalogError("INSERT…SELECT arity mismatch")
-            src = src.toDF(*target_cols)
         elif kind == "fn":
             src = low._table_fn(payload)
-            if len(src.columns) != len(target_cols):
-                raise CatalogError("INSERT…FROM fn arity mismatch")
-            src = src.toDF(*target_cols)
-        elif kind == "frame":
-            # internal: a pre-lowered DataFrame (the MERGE INTO
-            # not-matched path) rides the same defaults/serials/CHECK
-            # machinery as every other insert source
-            src = payload
-            if len(src.columns) != len(target_cols):
-                raise CatalogError("MERGE INSERT arity mismatch")
-            src = src.toDF(*target_cols)
         else:  # pragma: no cover
             raise CatalogError(f"bad insert source {kind}")
+        if len(src.columns) != len(target_cols):
+            via = "SELECT" if kind == "query" else "FROM fn"
+            raise CatalogError(f"INSERT…{via} arity mismatch")
+        return src.toDF(*target_cols)
 
-        # fill defaults / serials, coerce types
+    def _write_rows(self, src: DataFrame, meta: dict, low, path: str) -> None:
+        """Write new rows ``src`` at ``path`` (see :meth:`_new_rows`),
+        constraints checked on the write job itself, and advance
+        ``meta["serial_next"]``."""
+        rows, serials, release = self._new_rows(src, meta, low)
+        checked, check = self._observed(rows, meta, low)
+        try:
+            self._write_table(checked, path, meta, low)
+            check()
+        finally:
+            release()
+        meta["serial_next"] = serials
+
+    def _new_rows(self, src: DataFrame, meta: dict, low):
+        """New rows ``src`` (named by their target columns) as the
+        table's columns: serials drawn, defaults filled, types coerced.
+        Returns the frame, the serial counters past it and the release
+        of what the frame pins (call it once the frame is written)."""
         out_cols: list = []
         serial_bases = dict(meta.get("serial_next") or {})
         need_serial = [
-            c for c in col_meta if c["serial"] and c["name"] not in src.columns
+            c for c in meta["columns"]
+            if c["serial"] and c["name"] not in src.columns
         ]
         n_rows = 0
         if need_serial:
@@ -669,7 +878,7 @@ class Catalog:
                 pid.cast("long") * F.lit(1 << 33)
             )
             dense_idx = F.element_at(off_arr, pid + 1) + local_idx
-        for c in col_meta:
+        for c in meta["columns"]:
             name = c["name"]
             stype = _parse_type(c["spark_type"])
             if name in src.columns:
@@ -685,84 +894,41 @@ class Catalog:
             else:
                 col = F.lit(None).cast(stype)
             out_cols.append(col.alias(name))
-        staged = src.select(*out_cols)
+        return (
+            src.select(*out_cols),
+            serial_bases,
+            src.unpersist if need_serial else (lambda: None),
+        )
 
-        # Validation rides the WRITE job itself (observe() metrics
-        # evaluated while the rows stream to parquet) instead of a
-        # separate aggregate pass: the source plan is computed ONCE,
-        # not twice — at 100 TB an INSERT…SELECT's source is the whole
-        # statement cost. Atomicity is preserved by staging into a tmp
-        # dir next to the table and moving the files in only after the
-        # flags come back clean; a violation (or a failed write) leaves
-        # the live table directory untouched, exactly as before.
+    def _observed(self, df: DataFrame, meta: dict, low):
+        """``df`` with the table's constraint flags observed on it, and
+        the check that raises the first violated one once a job over
+        that frame has run. Validation rides the WRITE job itself
+        (observe() metrics evaluated while the rows stream to parquet)
+        instead of a separate aggregate pass: the source plan is
+        computed ONCE, not twice — at 100 TB an INSERT…SELECT's source
+        is the whole statement cost."""
         violations = self._violation_conds(meta, low)
-        obs = None
-        if violations:
-            from pyspark.sql import Observation
+        if not violations:
+            return df, lambda: None
+        from pyspark.sql import Observation
 
-            obs = Observation()
-            staged = staged.observe(
-                obs,
-                *[
-                    F.max(F.coalesce(cond, F.lit(False))).alias(f"v{i}")
-                    for i, (cond, _) in enumerate(violations)
-                ],
-            )
-        data_path = self._data_path(stmt.table)
-        # per-statement staging dir, named like a commit's so a crashed
-        # statement's leftover is dropped when the catalog next opens:
-        # concurrent inserts into the same table must not clobber each
-        # other's staging output, and a leftover dir must never be
-        # swept into a later statement's move loop
-        tmp = _entry(self.root, uuid.uuid4().hex, "new")
-        new_files: list[str] = []
-        try:
-            self._write_table(staged, tmp, meta, low)
-            if obs is not None:
-                flags = obs.get
-                for i, (_, msg) in enumerate(violations):
-                    if flags.get(f"v{i}"):
-                        raise CatalogError(msg)
-            # clean: move the written files into the live dir
-            # (partition subdirs preserved; part-file names carry
-            # write-unique UUIDs so appends never collide)
-            for root, _dirs, files in os.walk(tmp):
-                rel = os.path.relpath(root, tmp)
-                dst_dir = (
-                    data_path
-                    if rel == "."
-                    else os.path.join(data_path, rel)
-                )
-                for f in files:
-                    if not f.endswith(".parquet"):
-                        continue
-                    os.makedirs(dst_dir, exist_ok=True)
-                    dst = os.path.join(dst_dir, f)
-                    os.rename(os.path.join(root, f), dst)
-                    new_files.append(dst)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if need_serial:
-                src.unpersist()
-        meta["serial_next"] = serial_bases
-        self._save_meta(stmt.table, meta)
-        # Delta for incremental view maintenance: exactly the files this
-        # insert wrote (re-planning `staged` after unpersist could
-        # regenerate serial ids differently; the written bytes can't).
-        # Built lazily — only if an incremental view actually consumes it.
-        new_files = sorted(new_files)
-        cols = [c["name"] for c in col_meta]
+        obs = Observation()
+        df = df.observe(
+            obs,
+            *[
+                F.max(F.coalesce(cond, F.lit(False))).alias(f"v{i}")
+                for i, (cond, _) in enumerate(violations)
+            ],
+        )
 
-        def delta() -> DataFrame | None:
-            if not new_files:
-                return None
-            return (
-                self.spark.read.option("basePath", data_path)
-                .parquet(*new_files)
-                .select(*cols)
-            )
+        def check() -> None:
+            flags = obs.get
+            for i, (_, msg) in enumerate(violations):
+                if flags.get(f"v{i}"):
+                    raise CatalogError(msg)
 
-        self._refresh_dependent_views(stmt.table, low, delta)
+        return df, check
 
     def _violation_conds(self, meta: dict, low) -> list[tuple[object, str]]:
         """The (flag expression, message) list behind constraint
@@ -805,26 +971,6 @@ class Catalog:
             )
         return violations
 
-    def _refresh_dependent_views(
-        self, table: str, low, delta=None
-    ) -> None:
-        """Keep `UPDATE BY <strategy>` views maintained: any view whose
-        defining query references the written table re-merges.
-        Incrementally-maintained Summing views merge ONLY the insert's
-        delta rows (O(touched buckets) via streaming/summing.py); every
-        other view takes the full refresh. ``delta`` is a zero-arg
-        callable returning the insert's rows (or None) — evaluated only
-        if an incremental view needs it, so plain inserts pay nothing."""
-        delta_df: DataFrame | None | bool = False  # False = not built yet
-        for meta, _q in self._dependent_views(table):
-            if meta.get("maintenance") == "incremental" and delta is not None:
-                if delta_df is False:
-                    delta_df = delta()
-                if delta_df is not None:
-                    self._delta_merge_view(meta, table, delta_df, low)
-                continue
-            self.refresh_view(meta["name"], low)
-
     def _dependent_views(self, table: str):
         """Each view whose defining query reads ``table``, with that
         query parsed."""
@@ -838,6 +984,13 @@ class Catalog:
             if any(r.name == table for r in _table_refs(q)):
                 yield meta, q
 
+    def _materialized_views(self, table: str) -> list[dict]:
+        """The dependent views of ``table`` that store data."""
+        return [
+            m for m, _q in self._dependent_views(table)
+            if m.get("strategy") != "plain"
+        ]
+
     def _rename_in_views(self, old: str, new: str) -> None:
         """Follow a table rename through every dependent view's stored
         query (ALTER … RENAME would otherwise orphan the views:
@@ -849,19 +1002,45 @@ class Catalog:
             meta["query"] = printer.query(q)
             self._save_meta(meta["name"], meta)
 
-    def _repair_dependent_views(self, table: str, low) -> None:
-        """Full repair for base-table mutations that bypass the insert
-        delta path (TRUNCATE / ALTER data rewrites / DROP PARTITION /
-        OPTIMIZE): incremental bucketed state only ever merges insert
-        deltas, so removed or rewritten base rows would otherwise stay
-        in the view forever and reads would be silently wrong. Rebuild
-        incremental state from the full query; re-run full-refresh
-        views for read-consistency before the next insert."""
-        for meta, _q in self._dependent_views(table):
-            if meta.get("maintenance") == "incremental":
-                self._rebuild_incremental(meta, low)
+    def _replace(
+        self, table: str, meta: dict, low, stage, new: DataFrame | None,
+        names: list[str] | None = None,
+    ) -> None:
+        """The one commit of a statement that replaces ``table``'s data.
+        ``stage(staged)`` writes the table's new entries ``names`` (the
+        data directory by default); every materialized view that reads
+        the table is derived again from the new rows and committed with
+        them, so the table and its views change together or not at all.
+        The insert delta path never sees removed or rewritten rows, so
+        an incremental view's state is rebuilt from the full query.
+
+        ``new`` is the table's new rows as a DataFrame. When its plan is
+        deterministic, each view is lowered against it and written in a
+        thread while ``stage`` writes the table (:func:`_run_beside`).
+        Otherwise, or with no ``new``, the views read the staged table
+        files once ``stage`` is done. Every job is joined before an
+        error is raised and the commit rolls back."""
+        views = self._materialized_views(table)
+        beside = new is not None and _deterministic(new)
+
+        def jobs(frame: DataFrame, staged: str) -> list:
+            over = _lowerer_over(low, table, frame)
+            return [
+                functools.partial(self._view_job(m, over), staged)
+                for m in views
+            ]
+
+        def write(staged: str) -> list[str]:
+            if beside:
+                write_table = functools.partial(stage, staged)
+                out = _run_beside([write_table, *jobs(new, staged)])[1:]
             else:
-                self.refresh_view(meta["name"], low)
+                stage(staged)
+                frame = self._read_data(os.path.join(staged, table), meta)
+                out = _run_beside(jobs(frame, staged))
+            return [n for names in out for n in names]
+
+        commit(self.root, names or [table], write)
 
     # --- views (S7): CREATE VIEW … UPDATE BY <strategy> -------------------
 
@@ -915,11 +1094,13 @@ class Catalog:
             "query": printer.query(v.query),
         }
         self._mark_incremental_if_eligible(meta, low)
-        self._save_meta(v.name, meta)
-        if meta.get("maintenance") == "incremental":
-            self._rebuild_incremental(meta, low)
-        else:
-            self.refresh_view(v.name, low)
+        job = self._view_job(meta, low)
+
+        def write(staged: str) -> None:
+            job(staged)
+            _dump(os.path.join(staged, v.name + ".json"), meta)
+
+        commit(self.root, [v.name, v.name + ".json"], write)
 
     def _mark_incremental_if_eligible(self, meta: dict, low) -> None:
         """A view maintains incrementally when the defining query is a
@@ -1101,11 +1282,13 @@ class Catalog:
         return self._data_path(name)
 
     def _state_merge(
-        self, meta: dict, batch: DataFrame, state: str | None = None
-    ) -> None:
+        self, meta: dict, batch: DataFrame, state: str | None = None,
+        staged: str | None = None,
+    ) -> list[str]:
         """Merge one batch of view-query output rows into the bucketed
         state (the view's own, unless ``state`` names another) per the
-        view's strategy."""
+        view's strategy; with ``staged``, stage the touched buckets
+        there and return their names instead of committing them."""
         from nutdb_spark.streaming.summing import (
             replacing_merge_batch,
             summing_merge_batch,
@@ -1115,75 +1298,41 @@ class Catalog:
         state = state or self._state_path(meta["name"])
         batch = batch.select(*meta["out_columns"])
         if meta["strategy"] == "replacing":
-            replacing_merge_batch(
-                batch, keys, meta["primary_key"], state, _VIEW_BUCKETS
+            return replacing_merge_batch(
+                batch, keys, meta["primary_key"], state, _VIEW_BUCKETS, staged
             )
         elif meta["strategy"] == "aggregating":
             from nutdb_spark.streaming.summing import aggregating_merge_batch
 
-            aggregating_merge_batch(
-                batch, keys, meta["merge_ops"], state, _VIEW_BUCKETS
+            return aggregating_merge_batch(
+                batch, keys, meta["merge_ops"], state, _VIEW_BUCKETS, staged
             )
-        else:
-            sums = [c for c in meta["out_columns"] if c not in keys]
-            summing_merge_batch(batch, keys, sums, state, _VIEW_BUCKETS)
+        sums = [c for c in meta["out_columns"] if c not in keys]
+        return summing_merge_batch(batch, keys, sums, state, _VIEW_BUCKETS, staged)
 
-    def _rebuild_incremental(self, meta: dict, low) -> None:
-        """(Re)build the bucketed state from the full defining query —
-        the bootstrap at CREATE time (and the fallback repair path).
-        The new state is staged whole and committed over the old one, so
-        the view keeps its state until the rebuild query has run."""
+    def _view_job(self, meta: dict, low):
+        """Lower view ``meta``'s defining query with ``low`` now and
+        return the job that writes the view's data, derived whole from
+        that query, at ``<staged>/<name>`` and returns the name.
+
+        An incremental view's data is its bucketed state, built by the
+        strategy's merge over the full query. Any other view is a full
+        refresh: Summing sums numeric non-key columns per ORDER BY key
+        (ClickHouse SummingMergeTree semantics; non-numeric non-key
+        columns keep an arbitrary representative via `first`);
+        Replacing keeps, per ORDER BY key, the row with the greatest
+        PRIMARY KEY version (ReplacingMergeTree(ver) semantics)."""
         name = meta["name"]
         df = low.lower_query(self.view_query(meta))
+        if meta.get("maintenance") == "incremental":
 
-        def write(staged: str) -> None:
-            state = os.path.join(staged, name)
-            self._state_merge(meta, df, state)
-            os.makedirs(state, exist_ok=True)  # a view over no rows
+            def build(staged: str) -> list[str]:
+                state = os.path.join(staged, name)
+                self._state_merge(meta, df, state)
+                os.makedirs(state, exist_ok=True)  # a view over no rows
+                return [name]
 
-        commit(self.root, [name], write)
-
-    def _delta_merge_view(
-        self, meta: dict, table: str, delta: DataFrame, low
-    ) -> None:
-        """Apply one insert's delta through the view query and merge it
-        into the bucketed state (ClickHouse MV semantics: the insert
-        block flows through the query; branches not referencing the
-        inserted table contribute nothing)."""
-        from nutdb_spark.frontend.lower import Lowerer
-
-        branches = _unionall_branches(self.view_query(meta))
-        base_resolve = low.resolve_table
-
-        def resolve(name: str) -> DataFrame:
-            if name == table:
-                return delta
-            return base_resolve(name)
-
-        low2 = Lowerer(self.spark, resolve, low.params)
-        parts = []
-        for b in branches:
-            if any(r.name == table for r in _table_refs(b)):
-                parts.append(low2.lower_query(b))
-        if not parts:
-            return
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        self._state_merge(meta, out)
-
-    def refresh_view(self, name: str, low) -> None:
-        """Full refresh: re-run the defining query and apply the merge
-        strategy — Summing: sum numeric non-key columns per ORDER BY
-        key (ClickHouse SummingMergeTree semantics; non-numeric
-        non-key columns keep an arbitrary representative via `first`);
-        Replacing: keep, per ORDER BY key, the row with the greatest
-        PRIMARY KEY version (ReplacingMergeTree(ver) semantics). The
-        result is staged and committed over the view's data."""
-        meta = self._load_meta(name)
-        if meta.get("strategy") == "plain":
-            return  # nothing materialized to refresh
-        df = low.lower_query(self.view_query(meta))
+            return build
         keys = meta["order_by"]
         if meta.get("strategy") == "replacing":
             from nutdb_spark.operators import relational as R
@@ -1204,31 +1353,54 @@ class Catalog:
                 if c not in keys
             ]
             merged = df.groupBy(*keys).agg(*aggs).select(*df.columns)
-        self._commit_frame(name, merged)
 
-    def _commit_frame(self, name: str, df: DataFrame) -> None:
-        """Stage ``df`` as the data of object ``name`` and commit it."""
-        commit(
-            self.root,
-            [name],
-            lambda staged: df.write.parquet(os.path.join(staged, name)),
-        )
+        def refresh(staged: str) -> list[str]:
+            merged.write.parquet(os.path.join(staged, name))
+            return [name]
+
+        return refresh
+
+    def _delta_job(self, meta: dict, table: str, delta: DataFrame, low):
+        """Lower an incremental view's query over one insert's ``delta``
+        now (ClickHouse MV semantics: the insert block flows through the
+        query; branches not referencing the inserted table contribute
+        nothing) and return the job that stages the state buckets the
+        rows touch, merged, under ``<staged>/<name>`` and returns their
+        names."""
+        name = meta["name"]
+        over = _lowerer_over(low, table, delta)
+        parts = [
+            over.lower_query(b)
+            for b in _unionall_branches(self.view_query(meta))
+            if any(r.name == table for r in _table_refs(b))
+        ]
+
+        def merge(staged: str) -> list[str]:
+            if not parts:
+                return []
+            batch = functools.reduce(DataFrame.unionByName, parts)
+            touched = self._state_merge(
+                meta, batch, staged=os.path.join(staged, name)
+            )
+            return [os.path.join(name, b) for b in touched]
+
+        return merge
 
     def read_view(self, name: str) -> DataFrame:
         meta = self._load_meta(name)
         self.view_query(meta)  # a view that cannot be maintained is unreadable
         if meta.get("maintenance") == "incremental":
             state = self._state_path(name)
+            schema = S.StructType.fromJson(json.loads(meta["merged_schema"]))
             if not any(
                 d.startswith("__bucket=")
                 for d in (os.listdir(state) if os.path.isdir(state) else [])
             ):
-                schema = S.StructType.fromJson(
-                    json.loads(meta["merged_schema"])
-                )
                 return self.spark.createDataFrame([], schema)
-            return self.spark.read.parquet(state).select(
-                *meta["out_columns"]
+            return (
+                self.spark.read.schema(schema.add("__bucket", S.IntegerType()))
+                .parquet(state)
+                .select(*meta["out_columns"])
             )
         return self.spark.read.parquet(self._data_path(name))
 
@@ -1346,19 +1518,21 @@ class Catalog:
             raise CatalogError(f"unknown {stmt.entity} {stmt.name!r}")
         commit(self.root, [stmt.name + ".json", stmt.name])
 
-    def truncate(self, stmt: A.TruncateStmt, low=None) -> None:
+    def truncate(self, stmt: A.TruncateStmt, low) -> None:
         meta = self._load_meta(stmt.name)
         if meta is None or meta["type"] != stmt.entity:
             if stmt.if_exists:
                 return
             raise CatalogError(f"unknown {stmt.entity} {stmt.name!r}")
-        commit(
-            self.root,
-            [stmt.name],
-            lambda staged: os.makedirs(os.path.join(staged, stmt.name)),
-        )
-        if stmt.entity == "table" and low is not None:
-            self._repair_dependent_views(stmt.name, low)
+
+        def stage(staged: str) -> None:
+            os.makedirs(os.path.join(staged, stmt.name))
+
+        if stmt.entity != "table":
+            commit(self.root, [stmt.name], stage)
+            return
+        empty = self.spark.createDataFrame([], self._schema(meta))
+        self._replace(stmt.name, meta, low, stage, empty)
 
     def alter(self, stmt: A.AlterStmt, low) -> None:
         meta = self._load_meta(stmt.table)
@@ -1395,6 +1569,15 @@ class Catalog:
             # rewrite data files with the new column (default or NULL)
             self._rewrite(stmt.table, meta, low)
         elif act == "drop_column":
+            keys = set(meta["order_by"] or [])
+            if meta["partition_by"]:
+                pe = Parser(meta["partition_by"]).parse_expr()
+                keys |= {n.name for n in _walk_ast(pe) if isinstance(n, A.Ident)}
+            if stmt.payload in keys:
+                raise CatalogError(
+                    f"cannot drop column {stmt.payload!r}: the table's "
+                    "ORDER BY or PARTITION BY uses it"
+                )
             meta["columns"] = [
                 c for c in meta["columns"] if c["name"] != stmt.payload
             ]
@@ -1404,6 +1587,17 @@ class Catalog:
             for c in meta["columns"]:
                 if c["name"] == old:
                     c["name"] = new
+            # the table's keys follow the column, so the rewrite keeps
+            # its layout
+            for key in ("order_by", "primary_key"):
+                if meta[key]:
+                    meta[key] = [new if k == old else k for k in meta[key]]
+            if meta["partition_by"]:
+                pe = Parser(meta["partition_by"]).parse_expr()
+                for n in _walk_ast(pe):
+                    if isinstance(n, A.Ident) and n.name == old:
+                        n.name = new
+                meta["partition_by"] = printer.expr(pe)
             self._rewrite(stmt.table, meta, low, rename=(old, new))
         elif act == "modify_column":
             # [EXT] retype in the metadata, then let the schema-
@@ -1449,7 +1643,24 @@ class Catalog:
             if col is None:
                 raise CatalogError("table is not partitioned")
             lit = val.value if isinstance(val, A.Lit) else None
-            commit(self._data_path(stmt.table), [f"{col}={lit}"])
+            data, gone = self._data_path(stmt.table), f"{col}={lit}"
+            rest = [
+                os.path.join(data, d)
+                for d in os.listdir(data)
+                if d.startswith(f"{col}=") and d != gone
+            ]
+            schema = self._schema(meta)
+            left = (
+                self.spark.read.schema(schema)
+                .option("basePath", data)
+                .parquet(*rest)
+                if rest
+                else self.spark.createDataFrame([], schema)
+            )
+            self._replace(
+                stmt.table, meta, low, lambda staged: None, left,
+                names=[os.path.join(stmt.table, gone)],
+            )
         elif act == "update":
             # [EXT] ClickHouse mutation: rewrite matched rows in place.
             # Same scale shape as ClickHouse's own mutations: a full
@@ -1502,17 +1713,8 @@ class Catalog:
             return
         else:
             raise CatalogError(f"unsupported ALTER action {act}")
-        if act not in (
-            "add_column", "drop_column", "rename_column", "modify_column",
-        ):
-            self._save_meta(stmt.table, meta)  # _rewrite committed it
-        # Data-mutating ALTERs invalidate incremental view state (the
-        # delta-merge path never sees removed/rewritten rows).
-        if act in (
-            "add_column", "drop_column", "rename_column", "drop_partition",
-            "update", "delete",
-        ):
-            self._repair_dependent_views(stmt.table, low)
+        if act in ("add_index", "drop_index", "add_constraint", "drop_constraint"):
+            self._save_meta(stmt.table, meta)  # the others committed theirs
 
     def merge(self, stmt: "A.MergeStmt", low) -> None:
         """[EXT] ANSI MERGE INTO — the warehouse upsert, executed over
@@ -1739,24 +1941,39 @@ class Catalog:
                         "MERGE INSERT arity does not match the target "
                         "column list"
                     )
-                row = part.select(
-                    *[
-                        compile_(e).alias(n)
-                        for e, n in zip(exprs, target_cols)
-                    ]
-                ).localCheckpoint()  # pin before the target dir swap
-                ins_frames.append((target_cols, row))
-        # --- apply: atomic rewrite (constraints validated on the
-        # rewrite job itself), then the standard insert path ---
-        self._overwrite(stmt.table, meta, out, low, validate=True)
-        for target_cols, row in ins_frames:
-            if row.isEmpty():
-                continue
-            self.insert(
-                A.InsertStmt(stmt.table, list(target_cols), ("frame", row)),
-                low,
-            )
-        self._repair_dependent_views(stmt.table, low)
+                for n in target_cols:
+                    if n not in by_name:
+                        raise CatalogError(f"unknown column {n!r}")
+                ins_frames.append(
+                    part.select(
+                        *[
+                            compile_(e).alias(n)
+                            for e, n in zip(exprs, target_cols)
+                        ]
+                    ).localCheckpoint()  # pinned: read after the rewrite
+                )
+        # --- apply: the rewrite (constraints validated on the rewrite
+        # job itself) and the not-matched rows, written through the
+        # INSERT row path, are staged as one table and committed with
+        # its sidecar (serial counters) and its views ---
+        ins_frames = [row for row in ins_frames if not row.isEmpty()]
+        checked, check = self._observed(out, meta, low)
+        table = stmt.table
+
+        def stage(staged: str) -> None:
+            path = os.path.join(staged, table)
+            self._write_table(checked, path, meta, low)
+            check()
+            for i, row in enumerate(ins_frames):
+                rows = os.path.join(staged, f".insert-{i}")
+                self._write_rows(row, meta, low, rows)
+                _move_files(rows, path)
+            _dump(os.path.join(staged, table + ".json"), meta)
+
+        self._replace(
+            table, meta, low, stage, None if ins_frames else out,
+            names=[table, table + ".json"],
+        )
 
     def exchange(self, a: str, b: str, low) -> None:
         """[EXT] EXCHANGE TABLES a AND b: both tables (and their
@@ -1781,44 +1998,27 @@ class Catalog:
         *,
         validate: bool = False,
     ) -> None:
-        """Full-table rewrite preserving the declared partition layout
-        and ORDER BY clustering, staged and swapped in by
-        :func:`commit`. With ``validate=True`` the constraint flags
-        ride the staged write itself via observe() — one pass over the
-        rewritten rows instead of a validation aggregate plus the write
-        — and a violation aborts BEFORE the swap, so the live table is
-        untouched either way."""
-        violations = self._violation_conds(meta, low) if validate else []
-        obs = None
-        if violations:
-            from pyspark.sql import Observation
+        """Full-table rewrite in the declared layout, committed with the
+        table's views by :meth:`_replace`. With ``validate=True`` the
+        constraint flags ride the staged write itself via observe() —
+        one pass over the rewritten rows instead of a validation
+        aggregate plus the write — and a violation aborts BEFORE the
+        swap, so the live table is untouched either way."""
+        checked, check = (
+            self._observed(df, meta, low) if validate else (df, lambda: None)
+        )
 
-            obs = Observation()
-            df = df.observe(
-                obs,
-                *[
-                    F.max(F.coalesce(cond, F.lit(False))).alias(f"v{i}")
-                    for i, (cond, _) in enumerate(violations)
-                ],
-            )
+        def stage(staged: str) -> None:
+            self._write_table(checked, os.path.join(staged, name), meta, low)
+            check()
 
-        def write(staged: str) -> None:
-            self._write_table(df, os.path.join(staged, name), meta, low)
-            if obs is not None:
-                flags = obs.get
-                for i, (_, msg) in enumerate(violations):
-                    if flags.get(f"v{i}"):
-                        raise CatalogError(msg)
-
-        commit(self.root, [name], write)
+        self._replace(name, meta, low, stage, df)
 
     def _rewrite(self, name: str, meta: dict, low, rename=None) -> None:
         """Schema-evolution rewrite (columns added/dropped/renamed or
-        retyped): the data directory and the new sidecar commit as one
-        unit."""
-        old = self.read_table(name) if rename is None else (
-            self.spark.read.parquet(self._data_path(name))
-        )
+        retyped): the data directory, the new sidecar and the table's
+        views commit as one unit."""
+        old = self.read_table(name)
         if rename:
             old = old.withColumnRenamed(*rename)
         cols = []
@@ -1836,16 +2036,20 @@ class Catalog:
                 cols.append(F.lit(None).cast(stype).alias(c["name"]))
         out = old.select(*cols)
 
-        def write(staged: str) -> None:
-            out.write.parquet(os.path.join(staged, name))
+        def stage(staged: str) -> None:
+            self._write_table(out, os.path.join(staged, name), meta, low)
             _dump(os.path.join(staged, name + ".json"), meta)
 
-        commit(self.root, [name, name + ".json"], write)
+        self._replace(name, meta, low, stage, out, names=[name, name + ".json"])
 
     def optimize(self, stmt: A.OptimizeStmt, low) -> None:
         """S14: small-file compaction (Delta-style OPTIMIZE by hand):
-        read → repartition to ~128 MB targets → staged write swapped in
-        by :func:`commit`."""
+        read → repartition to ~128 MB targets → staged write in the
+        declared layout, committed by :meth:`_replace` together with
+        every dependent view derived again from the compacted rows.
+        Compaction preserves content, but the views are still rebuilt:
+        OPTIMIZE is the documented repair hook for views knocked stale
+        by external file surgery, now inside the table's own commit."""
         meta = self._load_meta(stmt.table)
         if meta is None:
             raise CatalogError(f"unknown table {stmt.table!r}")
@@ -1887,13 +2091,11 @@ class Catalog:
             else:
                 df = df.dropDuplicates()
         out = df.repartition(target)
-        if meta["order_by"]:
-            out = out.sortWithinPartitions(*meta["order_by"])
-        self._commit_frame(stmt.table, out)
-        # Compaction preserves content, but rebuild dependent
-        # incremental state anyway: OPTIMIZE is the documented repair
-        # hook for views knocked stale by external file surgery.
-        self._repair_dependent_views(stmt.table, low)
+
+        def stage(staged: str) -> None:
+            self._write_table(out, os.path.join(staged, stmt.table), meta, low)
+
+        self._replace(stmt.table, meta, low, stage, df)
 
 
 def _sql(e) -> str | None:

@@ -322,7 +322,7 @@ class NutEngine:
             # the view's OWN GROUP BY must be exactly its merge keys:
             # when it groups finer (GROUP BY region, item with ORDER BY
             # region), maintenance falls back to 'full' and
-            # refresh_view merges the stored rows Summing-style per
+            # the full refresh merges the stored rows Summing-style per
             # merge key — SUMMING a min/max/count column across the
             # extra grain, so the stored aggregates are no longer the
             # functions the query names. Rewriting onto such a view

@@ -53,6 +53,10 @@ def get_spark(
         # under the old 8g heap.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "20g"))
         .config("spark.ui.enabled", "false")
+        # PySpark records a Python call site for every DataFrame and
+        # functions call (several py4j round trips each); every one of
+        # them would name a line of the lowering, never the user's SQL
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))

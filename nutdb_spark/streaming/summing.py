@@ -1,6 +1,6 @@
 """[EXT] Incremental Summing-view maintenance (foreachBatch merge).
 
-The batch path (catalog.refresh_view) fully recomputes a
+The batch path (the catalog's full view refresh) recomputes a
 `UPDATE BY Summing` view; this is the incremental path per SURVEY §7.2
 M6: maintain the same merged state from a stream, one micro-batch at a
 time. Summing merges are associative and commutative (per-key sums), so
@@ -18,7 +18,8 @@ batch touching 0.1% of keys must not rewrite the other 99.9%. Untouched
 bucket directories are left physically untouched (tests assert their
 mtimes). The touched buckets are staged and swapped in as one batch by
 ``catalog.commit`` (single-writer assumption, which Structured
-Streaming's one-query-per-sink guarantees).
+Streaming's one-query-per-sink guarantees), or staged for a caller that
+commits them together with the rows they came from (a catalog INSERT).
 """
 
 from __future__ import annotations
@@ -38,41 +39,61 @@ def _bucket_dirs(state_path: str) -> list[str]:
 
 
 def _merge_touched_buckets(
-    partial: DataFrame, merge, state_path: str
-) -> None:
+    partial: DataFrame, merge, state_path: str, staged: str | None = None
+) -> list[str]:
     """Shared bucketed-state maintenance: given a batch partial that
     carries an int ``__bucket`` column, read ONLY the touched state
     buckets, apply ``merge(state ∪ partial) -> merged`` and commit the
-    touched bucket directories as one batch (single-writer). A state
-    that does not exist yet is written in place: nothing live to keep.
-    The only driver-side values are the touched bucket ids (≤ B)."""
-    if not os.path.isdir(state_path):
+    touched bucket directories as one batch (single-writer). With
+    ``staged``, the merged buckets are written there instead and only
+    their names are returned, for the caller to commit with entries of
+    its own. A state that does not exist yet is written in place when
+    nothing is staged: nothing live to keep. The only driver-side
+    values are the touched bucket ids (≤ B). Returns the touched
+    bucket directory names (none for a state written in place)."""
+    if staged is None and not os.path.isdir(state_path):
         partial.write.partitionBy("__bucket").parquet(state_path)
-        return
+        return []
     spark = partial.sparkSession
+    # computed once, then read twice: for its touched buckets and to
+    # merge into them
+    partial = partial.localCheckpoint()
     touched = sorted(
         r["__bucket"] for r in partial.select("__bucket").distinct().collect()
     )
     if not touched:
-        return
+        return []
     touched_set = set(touched)
     hit = [
         os.path.join(state_path, d)
-        for d in _bucket_dirs(state_path)
+        for d in (_bucket_dirs(state_path) if os.path.isdir(state_path) else [])
         if int(d.split("=", 1)[1]) in touched_set
     ]
     if hit:
-        state = spark.read.option("basePath", state_path).parquet(*hit)
-        partial = merge(state.unionByName(partial))
+        # the state is read with the partial's schema (an inferred one
+        # costs a job) and keeps it: the merge's output is cast back, so
+        # a widening aggregate (a decimal sum) cannot drift the stored
+        # types from one merge to the next
+        state = (
+            spark.read.schema(partial.schema)
+            .option("basePath", state_path)
+            .parquet(*hit)
+        )
+        partial = merge(state.unionByName(partial)).select(
+            *[F.col(f.name).cast(f.dataType) for f in partial.schema]
+        )
     # a touched bucket that aggregates to zero rows is not written, so
     # the commit removes it
-    commit(
-        state_path,
-        [f"__bucket={b}" for b in touched],
-        lambda staged: partial.write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(staged),
-    )
+    names = [f"__bucket={b}" for b in touched]
+
+    def write(out: str) -> None:
+        partial.write.mode("overwrite").partitionBy("__bucket").parquet(out)
+
+    if staged is not None:
+        write(staged)
+    else:
+        commit(state_path, names, write)
+    return names
 
 
 def _with_bucket(df: DataFrame, keys: list[str], n_buckets: int) -> DataFrame:
@@ -89,9 +110,11 @@ def summing_merge_batch(
     sums: list[str],
     state_path: str,
     n_buckets: int = DEFAULT_BUCKETS,
-) -> None:
+    staged: str | None = None,
+) -> list[str]:
     """Merge one micro-batch of raw rows into the bucketed summing
-    state, rewriting only the buckets the batch's keys fall in."""
+    state, rewriting only the buckets the batch's keys fall in
+    (``staged``: see :func:`_merge_touched_buckets`)."""
     partial = _with_bucket(
         batch_df.groupBy(*keys).agg(
             *[F.sum(c).alias(c) for c in sums],
@@ -107,7 +130,7 @@ def summing_merge_batch(
             F.sum("__n").alias("__n"),
         )
 
-    _merge_touched_buckets(partial, merge, state_path)
+    return _merge_touched_buckets(partial, merge, state_path, staged)
 
 
 def replacing_merge_batch(
@@ -116,7 +139,8 @@ def replacing_merge_batch(
     version: list[str],
     state_path: str,
     n_buckets: int = DEFAULT_BUCKETS,
-) -> None:
+    staged: str | None = None,
+) -> list[str]:
     """Replacing-strategy sibling of :func:`summing_merge_batch`:
     per merge key keep the row with the greatest ``version`` tuple
     (ClickHouse ReplacingMergeTree(ver)). Keep-max is associative and
@@ -135,7 +159,7 @@ def replacing_merge_batch(
         )
 
     partial = keep_max(_with_bucket(batch_df, keys, n_buckets))
-    _merge_touched_buckets(partial, keep_max, state_path)
+    return _merge_touched_buckets(partial, keep_max, state_path, staged)
 
 
 def incremental_summing(
@@ -170,7 +194,8 @@ def aggregating_merge_batch(
     merge_ops: dict,
     state_path: str,
     n_buckets: int = DEFAULT_BUCKETS,
-) -> None:
+    staged: str | None = None,
+) -> list[str]:
     """Aggregating-strategy sibling of :func:`summing_merge_batch`
     (ClickHouse AggregatingMergeTree for the re-aggregatable
     functions): the batch is the VIEW QUERY's output over the insert
@@ -189,4 +214,4 @@ def aggregating_merge_batch(
             ]
         )
 
-    _merge_touched_buckets(merge(partial), merge, state_path)
+    return _merge_touched_buckets(merge(partial), merge, state_path, staged)

@@ -40,27 +40,32 @@ INC_VIEW = "CREATE VIEW iv UPDATE BY Summing ORDER BY (k) AS SELECT k, v FROM t"
 
 
 class Case:
-    def __init__(
-        self, setup, stmt, obj, before, after, write, asides, ins,
-        moves_before=0, removes_before=0,
-    ):
-        self.setup, self.stmt, self.obj = setup, stmt, obj
-        self.before, self.after = before, after
-        # the staged write: (function, its call number in the statement)
-        self.write = write
+    def __init__(self, setup, stmt, obj, before, after, write, asides, ins):
+        self.setup, self.stmt = setup, stmt
+        # one object, or a tuple of objects checked together, each with
+        # its own entry in ``before`` and ``after``
+        together = isinstance(obj, tuple)
+        self.objs = obj if together else (obj,)
+        self.before = before if together else (before,)
+        self.after = after if together else (after,)
+        # the staged writes: (function, its call number in the
+        # statement), a list when the commit stages several entries
+        self.writes = write if isinstance(write, list) else [write] * bool(write)
         self.asides, self.ins = asides, ins  # live paths moved aside / in
-        # _move/_remove calls the statement makes before this commit
-        self.moves_before, self.removes_before = moves_before, removes_before
 
     def steps(self) -> list[str]:
         return (
-            (["write"] if self.write else [])
+            ["write" + (str(i) if i else "") for i in range(len(self.writes))]
             + [f"aside{i}" for i in range(self.asides)]
             + [f"in{i}" for i in range(self.ins)]
             + ["drop_asides"]
         )
 
 
+# A statement that writes a table commits the table and its views as
+# one unit: the views' writes run beside the table's, in any order, so
+# a fault in either write leaves both objects as they were.
+T_IV = ("t", "iv")
 CASES = {
     # CTAS OR REPLACE reads the table it replaces
     "ctas_replace": Case(
@@ -93,6 +98,7 @@ CASES = {
         "t", (KV, ROWS), (["k", "w"], ROWS),
         ("parquet", 1), 2, 2,
     ),
+    # the rewrite and the sidecar (serial counters) commit together
     "merge": Case(
         BASE + [
             "CREATE TABLE s (k Int64, v Int64)",
@@ -101,7 +107,7 @@ CASES = {
         "MERGE INTO t USING s ON t.k = s.k "
         "WHEN MATCHED THEN UPDATE SET v = s.v",
         "t", (KV, ROWS), (KV, [(1, 10), (2, 99), (3, 30)]),
-        ("parquet", 1), 1, 1,
+        ("parquet", 1), 2, 2,
     ),
     "optimize": Case(
         BASE + ["INSERT INTO t VALUES (1, 10)"],
@@ -118,33 +124,46 @@ CASES = {
     "drop_table": Case(
         BASE, "DROP TABLE t", "t", (KV, ROWS), None, None, 2, 0,
     ),
-    # the INSERT's own write is parquet call 1; the view's is call 2
+    # an INSERT commits its part file, the sidecar and the view: the
+    # sidecar and the view move aside, all three move in
     "full_view": Case(
         BASE + [FULL_VIEW], "INSERT INTO t VALUES (4, 40)",
-        "fv", (KV, ROWS), (KV, ROWS + [(4, 40)]),
-        ("parquet", 2), 1, 1,
+        ("t", "fv"), ((KV, ROWS),) * 2, ((KV, ROWS + [(4, 40)]),) * 2,
+        [("parquet", 1), ("parquet", 2)], 2, 3,
     ),
     # one key, so one touched bucket, which already exists
     "inc_view_delta": Case(
         BASE + [INC_VIEW], "INSERT INTO t VALUES (1, 5)",
-        "iv", (KV, ROWS), (KV, [(1, 15), (2, 20), (3, 30)]),
-        ("parquet", 2), 1, 1,
+        T_IV, ((KV, ROWS),) * 2,
+        ((KV, sorted(ROWS + [(1, 5)])), (KV, [(1, 15), (2, 20), (3, 30)])),
+        [("parquet", 1), ("parquet", 2)], 2, 3,
     ),
-    # the DELETE commits t first (2 moves, 2 removes), then the view's
-    # state is rebuilt and committed whole
     "inc_view_rebuild": Case(
         BASE + [INC_VIEW], "ALTER TABLE t DELETE WHERE k = 2",
-        "iv", (KV, ROWS), (KV, [(1, 10), (3, 30)]),
-        ("parquet", 2), 1, 1, moves_before=2, removes_before=2,
+        T_IV, ((KV, ROWS),) * 2, ((KV, [(1, 10), (3, 30)]),) * 2,
+        [("parquet", 1), ("parquet", 2)], 2, 2,
+    ),
+    "optimize_inc_view": Case(
+        BASE + [INC_VIEW, "INSERT INTO t VALUES (1, 10)"],
+        "OPTIMIZE TABLE t DEDUPLICATE",
+        T_IV,
+        ((KV, sorted(ROWS + [(1, 10)])), (KV, [(1, 20), (2, 20), (3, 30)])),
+        ((KV, ROWS),) * 2,
+        [("parquet", 1), ("parquet", 2)], 2, 2,
+    ),
+    # the view's state write is the statement's one parquet write
+    "truncate_inc_view": Case(
+        BASE + [INC_VIEW], "TRUNCATE TABLE t",
+        T_IV, ((KV, ROWS),) * 2, ((KV, []),) * 2,
+        ("parquet", 1), 2, 2,
     ),
 }
 
 PARAMS = [(name, step) for name, c in CASES.items() for step in c.steps()]
 
-# A step that fails before the commit point leaves the case's object as
-# set up, and every statement can run on it again (an INSERT's rows stay
-# in the base table, but the view they failed to reach does not change),
-# so the case's next step reuses the catalog.
+# A step that fails before the commit point leaves the case's objects
+# as set up, and every statement can run on them again, so the case's
+# next step reuses the catalog.
 _READY: dict[str, str] = {}
 
 
@@ -159,6 +178,10 @@ def _read(eng, obj):
         return None
     df = eng.sql(f"SELECT * FROM {obj}")
     return df.columns, sorted(tuple(r) for r in df.collect())
+
+
+def _read_all(eng, objs):
+    return tuple(_read(eng, o) for o in objs)
 
 
 def _commit_entries(root) -> list[str]:
@@ -214,15 +237,15 @@ def test_commit_fault(spark, tmp_path_factory, monkeypatch, name, step):
         root = eng.catalog.root
         for s in c.setup:
             eng.sql(s)
-        assert _read(eng, c.obj) == c.before
-    if step == "write":
-        target, n = c.write
+        assert _read_all(eng, c.objs) == c.before
+    if step.startswith("write"):
+        target, n = c.writes[int(step[5:] or 0)]
     elif step.startswith("aside"):
-        target, n = "move", c.moves_before + 1 + int(step[5:])
+        target, n = "move", 1 + int(step[5:])
     elif step.startswith("in"):
-        target, n = "move", c.moves_before + c.asides + 1 + int(step[2:])
+        target, n = "move", c.asides + 1 + int(step[2:])
     else:
-        target, n = "remove", c.removes_before + 1
+        target, n = "remove", 1
     fault = _Fault(monkeypatch, target, n)
     committed = step == "drop_asides"
     if committed:
@@ -234,11 +257,11 @@ def test_commit_fault(spark, tmp_path_factory, monkeypatch, name, step):
     monkeypatch.undo()
     assert fault.fired
     expected = c.after if committed else c.before
-    assert _read(eng, c.obj) == expected
+    assert _read_all(eng, c.objs) == expected
     if not committed:
         assert _commit_entries(root) == []
     fresh = _engine(spark, root)
-    assert _read(fresh, c.obj) == expected
+    assert _read_all(fresh, c.objs) == expected
     assert _commit_entries(root) == []
     if not committed:
         _READY[name] = root
@@ -343,4 +366,154 @@ def test_failed_sidecar_write_keeps_previous(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     assert eng.catalog._load_meta("t") == before
     assert _read(_engine(spark, tmp_path), "t") == (KV, ROWS)
+    assert _commit_entries(tmp_path) == []
+
+
+# --- one commit for a table and its views ---------------------------------
+
+
+def test_update_with_rand_keeps_view_equal_to_table(spark, tmp_path):
+    """A rewrite whose plan is not deterministic is evaluated once: the
+    view is derived from the staged table files, not from a second run
+    of the rewrite."""
+    eng = _engine(spark, tmp_path)
+    for s in BASE + [INC_VIEW, FULL_VIEW]:
+        eng.sql(s)
+    eng.sql("ALTER TABLE t UPDATE v = toInt64(rand() % 1000) WHERE k >= 2")
+    table = _read(eng, "t")
+    assert table[1][0] == (1, 10)
+    for view in ("iv", "fv"):
+        assert _read(eng, view) == table
+
+
+def test_insert_refreshes_full_view_of_expression_partitioned_table(
+    spark, tmp_path
+):
+    eng = _engine(spark, tmp_path)
+    eng.sql("CREATE TABLE t (k Int64, v Int64) PARTITION BY k % 2")
+    eng.sql(FULL_VIEW)
+    eng.sql("INSERT INTO t VALUES (1, 10), (2, 20)")
+    eng.sql("INSERT INTO t VALUES (3, 30), (1, 5)")
+    assert _read(eng, "t") == (KV, sorted(ROWS + [(1, 5)]))
+    assert _read(eng, "fv") == (KV, ROWS)
+
+
+def test_view_jobs_run_under_the_statement_job_group(spark, tmp_path):
+    eng = _engine(spark, tmp_path)
+    for s in BASE + [INC_VIEW, FULL_VIEW]:
+        eng.sql(s)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("one-commit", "ALTER TABLE t DELETE")
+    try:
+        eng.sql("ALTER TABLE t DELETE WHERE k = 2")
+    finally:
+        sc._jsc.clearJobGroup()
+    # the table write and both view writes, each at least one job
+    assert len(tracker.getJobIdsForGroup("one-commit")) >= 3
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert _read(eng, "iv") == _read(eng, "fv") == (KV, [(1, 10), (3, 30)])
+
+
+ONE_COMMIT = {
+    "update": "ALTER TABLE t UPDATE v = v + 1 WHERE k = 2",
+    "delete": "ALTER TABLE t DELETE WHERE k = 2",
+    "add_column": "ALTER TABLE t ADD COLUMN w Int64 DEFAULT 7",
+    "modify_column": "ALTER TABLE t MODIFY COLUMN v Int64",
+    "drop_partition": "ALTER TABLE t DROP PARTITION 2",
+    "merge": "MERGE INTO t USING s ON t.k = s.k "
+    "WHEN MATCHED THEN UPDATE SET v = s.v "
+    "WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v)",
+    "optimize": "OPTIMIZE TABLE t FINAL",
+    "truncate": "TRUNCATE TABLE t",
+    "insert": "INSERT INTO t VALUES (4, 40), (5, 50)",
+}
+
+
+@pytest.mark.parametrize("name", list(ONE_COMMIT))
+def test_writing_statement_is_one_commit(spark, tmp_path, monkeypatch, name):
+    eng = _engine(spark, tmp_path)
+    for s in [
+        "CREATE TABLE t (k Int64, v Int64) ORDER BY (k) PARTITION BY k",
+        BASE[1],
+        "CREATE TABLE s (k Int64, v Int64)",
+        "INSERT INTO s VALUES (2, 99), (5, 50)",
+        INC_VIEW,
+        FULL_VIEW,
+    ]:
+        eng.sql(s)
+    calls = []
+    real = cat.commit
+
+    def counted(parent, names, write=None):
+        def staged(new):
+            more = write(new)
+            calls.append([*names, *(more or ())])
+            return more
+
+        real(parent, names, staged)
+
+    monkeypatch.setattr(cat, "commit", counted)
+    eng.sql(ONE_COMMIT[name])
+    monkeypatch.undo()
+    # the table's entries and both views' (an incremental view's
+    # touched buckets, when rows are only added)
+    assert len(calls) == 1
+    assert {n.split(os.sep)[0] for n in calls[0]} >= {"t", "iv", "fv"}
+    # one row per key, so each view equals the table's (k, v)
+    kv = sorted((r[0], r[1]) for r in eng.sql("SELECT k, v FROM t").collect())
+    assert _read(eng, "iv") == _read(eng, "fv") == (KV, kv)
+
+
+# --- recover leaves a live commit alone -----------------------------------
+
+
+def test_recover_inside_a_commit_keeps_it(spark, tmp_path, monkeypatch):
+    """Opening the catalog while a commit of this process stages (or an
+    INSERT stages its rows) leaves that commit to finish."""
+    eng = _engine(spark, tmp_path)
+    for s in BASE:
+        eng.sql(s)
+    real = cat.Catalog._write_table
+
+    def write_then_open(self, *a, **kw):
+        real(self, *a, **kw)
+        _engine(spark, tmp_path)
+
+    monkeypatch.setattr(cat.Catalog, "_write_table", write_then_open)
+    eng.sql("ALTER TABLE t UPDATE v = v + 1 WHERE k = 2")
+    eng.sql("INSERT INTO t VALUES (4, 40)")
+    monkeypatch.undo()
+    after = (KV, [(1, 10), (2, 21), (3, 30), (4, 40)])
+    assert _read(eng, "t") == after
+    assert _read(_engine(spark, tmp_path), "t") == after
+    assert _commit_entries(tmp_path) == []
+
+
+def test_second_process_opening_mid_commit_keeps_it(tmp_path):
+    """Another process opening the catalog while a commit stages skips
+    it: the commit's lock is held."""
+    os.makedirs(tmp_path / "t")
+    (tmp_path / "t" / "old").write_text("old")
+    opener = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from nutdb_spark.catalog import Catalog
+
+        Catalog(None, {str(tmp_path)!r})
+        """
+    )
+
+    def write(staged):
+        os.makedirs(os.path.join(staged, "t"))
+        with open(os.path.join(staged, "t", "new"), "w") as f:
+            f.write("new")
+        assert _commit_entries(tmp_path)
+        subprocess.run([sys.executable, "-c", opener], timeout=120, check=True)
+        assert os.path.exists(os.path.join(staged, "t", "new"))
+
+    cat.commit(str(tmp_path), ["t"], write)
+    assert os.listdir(tmp_path / "t") == ["new"]
     assert _commit_entries(tmp_path) == []

@@ -96,6 +96,62 @@ def test_mutation_preserves_partition_layout(eng):
     assert ks == [1, 3]
 
 
+def _part_files(data: str) -> list[str]:
+    return [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(data)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+
+
+def test_optimize_keeps_partition_layout(eng):
+    eng.sql("DROP TABLE IF EXISTS mu7")
+    eng.sql("CREATE TABLE mu7 (k Int64, p String) ORDER BY (k) PARTITION BY p")
+    eng.sql("INSERT INTO mu7 (k, p) VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    eng.sql("OPTIMIZE TABLE mu7 FINAL")
+    data = eng.catalog._data_path("mu7")
+    assert all("p=" in f for f in _part_files(data))
+    eng.sql("INSERT INTO mu7 (k, p) VALUES (4, 'a')")
+    got = eng.sql("SELECT p, count() AS n FROM mu7 GROUP BY p").collect()
+    assert {r["p"]: r["n"] for r in got} == {"a": 2, "b": 1, "c": 1}
+    eng.sql("ALTER TABLE mu7 DROP PARTITION 'a'")
+    assert sorted(r["k"] for r in eng.sql("SELECT k FROM mu7").collect()) == [2, 3]
+
+
+def test_schema_alter_keeps_partition_layout(eng):
+    eng.sql("DROP TABLE IF EXISTS mu8")
+    eng.sql("CREATE TABLE mu8 (k Int64, p String) ORDER BY (k) PARTITION BY p")
+    eng.sql("INSERT INTO mu8 (k, p) VALUES (1, 'a'), (2, 'b')")
+    eng.sql("ALTER TABLE mu8 ADD COLUMN w Int64 DEFAULT 7")
+    data = eng.catalog._data_path("mu8")
+    assert {d for d in os.listdir(data) if d.startswith("p=")} == {"p=a", "p=b"}
+    assert all("p=" in f for f in _part_files(data))
+    eng.sql("ALTER TABLE mu8 RENAME COLUMN p q")
+    assert {d for d in os.listdir(data) if d.startswith("q=")} == {"q=a", "q=b"}
+    eng.sql("ALTER TABLE mu8 DROP PARTITION 'a'")
+    rows = eng.sql("SELECT k, q, w FROM mu8").collect()
+    assert [tuple(r) for r in rows] == [(2, "b", 7)]
+    with pytest.raises(Exception, match="ORDER BY or PARTITION BY"):
+        eng.sql("ALTER TABLE mu8 DROP COLUMN q")
+
+
+def test_partitioned_files_keep_order_by_clustering(eng):
+    import pyarrow.parquet as pq
+
+    eng.sql("DROP TABLE IF EXISTS mu9")
+    eng.sql("CREATE TABLE mu9 (k Int64, p String) ORDER BY (k) PARTITION BY p")
+    rows = ", ".join(f"({k}, '{'ab'[k % 2]}')" for k in range(40, 0, -1))
+    data = eng.catalog._data_path("mu9")
+    for stmt in (f"INSERT INTO mu9 (k, p) VALUES {rows}", "OPTIMIZE TABLE mu9 FINAL"):
+        eng.sql(stmt)
+        files = _part_files(data)
+        assert files and all("p=" in f for f in files)
+        for f in files:
+            ks = pq.read_table(f).column("k").to_pylist()
+            assert ks == sorted(ks), (stmt, f)
+
+
 def test_mutation_repairs_incremental_view(eng):
     eng.sql("DROP VIEW IF EXISTS mu_v")
     eng.sql("DROP TABLE IF EXISTS mu6")
