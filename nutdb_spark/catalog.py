@@ -252,9 +252,10 @@ def _finish(parent: str, cid: str) -> None:
 
 
 def recover(parent: str) -> None:
-    """Finish every commit in ``parent`` whose owner is gone: its lock
-    file is left and no process holds the lock. A commit whose lock is
-    held is live and left alone."""
+    """Finish every commit in ``parent`` whose owner is gone: no process
+    holds its lock, or it has no lock file (a commit written before
+    commits took locks). A commit whose lock is held is live and left
+    alone."""
     cids = {
         f[len(_COMMIT):].split("-", 1)[0]
         for f in os.listdir(parent)
@@ -265,7 +266,10 @@ def recover(parent: str) -> None:
         try:
             fd = os.open(lock, os.O_WRONLY)
         except FileNotFoundError:
-            continue  # its owner finished and deleted the lock last
+            # its owner finished (nothing is left to do), or the commit
+            # predates commit locks
+            _finish(parent, cid)
+            continue
         try:
             fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
         except BlockingIOError:
@@ -309,7 +313,14 @@ def _lowerer_over(low, table: str, frame: DataFrame):
 
 
 def _deterministic(df: DataFrame) -> bool:
-    return df._jdf.queryExecution().analyzed().deterministic()
+    """Whether every query over ``df`` computes the same rows. Spark
+    counts ``now()`` and ``today()`` as deterministic, since they are
+    fixed once per query, but each query takes its own."""
+    plan = df._jdf.queryExecution().analyzed()
+    patterns = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    return plan.deterministic() and not plan.containsPattern(
+        patterns.CURRENT_LIKE()
+    )
 
 
 def _run_beside(jobs) -> list:
@@ -676,79 +687,62 @@ class Catalog:
     def read_table(self, name: str) -> DataFrame:
         return self._read_data(self._data_path(name), self._load_meta(name))
 
-    def _read_data(self, path: str, meta: dict) -> DataFrame:
-        """A table data directory, read with the schema its sidecar
-        stores. The directories of an expression PARTITION BY
-        (``__part=<value>``) hold data; the column they add is not the
-        table's."""
+    def _read_data(
+        self, path: str, meta: dict, parts: list[str] | None = None
+    ) -> DataFrame:
+        """A table data directory, or only its partition directories
+        ``parts``, read with the schema its sidecar stores. The
+        directories of an expression PARTITION BY (``__part=<value>``)
+        hold data; the column they add is not the table's."""
         schema = self._schema(meta)
-        if not any(
+        if parts is None and any(
             f.startswith("__part=") or not f.startswith(("_", "."))
             for f in os.listdir(path)
         ):
+            parts = [path]
+        if not parts:
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(path).select(*schema.names)
+        return (
+            self.spark.read.schema(schema)
+            .option("basePath", path)
+            .parquet(*parts)
+            .select(*schema.names)
+        )
 
     # --- INSERT (S2-S4) ---------------------------------------------------
 
     def insert(self, stmt: A.InsertStmt, low) -> None:
         """Append rows in one commit: the new part files, the sidecar
         (serial counters) and every materialized view over the table.
-        An incremental view merges ONLY the inserted rows into the
-        buckets they touch (streaming/summing.py); any other view is
-        derived again from the table with the rows appended. When the
-        rows' plan is deterministic the view jobs run beside the rows'
-        write over the same plan; otherwise they read the written files
-        (re-planning serial ids could draw them differently; the
-        written bytes can't change)."""
+        The views are derived from the written rows (re-running the
+        source could draw serial ids or ``now()`` differently; the
+        written bytes can't change): an incremental view merges ONLY
+        those rows into the buckets they touch (streaming/summing.py);
+        any other view is derived again from the table with the rows
+        appended."""
         meta = self._load_meta(stmt.table)
         if meta is None or meta["type"] != "table":
             raise CatalogError(f"unknown table {stmt.table!r}")
         table = stmt.table
-        rows, serials, release = self._new_rows(
-            self._insert_source(stmt, meta, low), meta, low
-        )
-        checked, check = self._observed(rows, meta, low)
+        src = self._insert_source(stmt, meta, low)
         views = self._materialized_views(table)
 
-        cols = [c["name"] for c in meta["columns"]]
-
-        def view_jobs(delta: DataFrame, staged: str) -> list:
+        def write(staged: str) -> list[str]:
+            path = os.path.join(staged, ".rows")
+            self._write_rows(src, meta, low, path)
+            delta = self._read_data(path, meta)
             jobs, whole = [], None
             for m in views:
                 if m.get("maintenance") == "incremental":
                     job = self._delta_job(m, table, delta, low)
                 else:
                     if whole is None:
-                        appended = self.read_table(table).select(*cols)
-                        appended = appended.unionByName(delta.select(*cols))
+                        appended = self.read_table(table).unionByName(delta)
                         whole = _lowerer_over(low, table, appended)
                     job = self._view_job(m, whole)
                 jobs.append(functools.partial(job, staged))
-            return jobs
-
-        def write(staged: str) -> list[str]:
-            path = os.path.join(staged, ".rows")
-            write_rows = functools.partial(
-                self._write_table, checked, path, meta, low
-            )
-            try:
-                if views and _deterministic(rows):
-                    jobs = [write_rows, *view_jobs(rows, staged)]
-                    touched = _run_beside(jobs)[1:]
-                    check()
-                else:
-                    write_rows()
-                    check()
-                    touched = (
-                        _run_beside(view_jobs(self._read_data(path, meta), staged))
-                        if views
-                        else []
-                    )
-            finally:
-                release()
+            touched = _run_beside(jobs)
             files = _move_files(path, os.path.join(staged, table))
-            meta["serial_next"] = serials
             _dump(os.path.join(staged, table + ".json"), meta)
             return [
                 *(os.path.relpath(f, staged) for f in files),
@@ -813,23 +807,10 @@ class Catalog:
         return src.toDF(*target_cols)
 
     def _write_rows(self, src: DataFrame, meta: dict, low, path: str) -> None:
-        """Write new rows ``src`` at ``path`` (see :meth:`_new_rows`),
-        constraints checked on the write job itself, and advance
-        ``meta["serial_next"]``."""
-        rows, serials, release = self._new_rows(src, meta, low)
-        checked, check = self._observed(rows, meta, low)
-        try:
-            self._write_table(checked, path, meta, low)
-            check()
-        finally:
-            release()
-        meta["serial_next"] = serials
-
-    def _new_rows(self, src: DataFrame, meta: dict, low):
-        """New rows ``src`` (named by their target columns) as the
-        table's columns: serials drawn, defaults filled, types coerced.
-        Returns the frame, the serial counters past it and the release
-        of what the frame pins (call it once the frame is written)."""
+        """Write new rows ``src`` (named by their target columns) at
+        ``path`` as the table's columns: serials drawn, defaults filled,
+        types coerced, constraints checked on the write job itself.
+        Advances ``meta["serial_next"]``."""
         out_cols: list = []
         serial_bases = dict(meta.get("serial_next") or {})
         need_serial = [
@@ -894,11 +875,14 @@ class Catalog:
             else:
                 col = F.lit(None).cast(stype)
             out_cols.append(col.alias(name))
-        return (
-            src.select(*out_cols),
-            serial_bases,
-            src.unpersist if need_serial else (lambda: None),
-        )
+        checked, check = self._observed(src.select(*out_cols), meta, low)
+        try:
+            self._write_table(checked, path, meta, low)
+            check()
+        finally:
+            if need_serial:
+                src.unpersist()
+        meta["serial_next"] = serial_bases
 
     def _observed(self, df: DataFrame, meta: dict, low):
         """``df`` with the table's constraint flags observed on it, and
@@ -1649,14 +1633,7 @@ class Catalog:
                 for d in os.listdir(data)
                 if d.startswith(f"{col}=") and d != gone
             ]
-            schema = self._schema(meta)
-            left = (
-                self.spark.read.schema(schema)
-                .option("basePath", data)
-                .parquet(*rest)
-                if rest
-                else self.spark.createDataFrame([], schema)
-            )
+            left = self._read_data(data, meta, rest)
             self._replace(
                 stmt.table, meta, low, lambda staged: None, left,
                 names=[os.path.join(stmt.table, gone)],

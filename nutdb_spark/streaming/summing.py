@@ -79,9 +79,7 @@ def _merge_touched_buckets(
             .option("basePath", state_path)
             .parquet(*hit)
         )
-        partial = merge(state.unionByName(partial)).select(
-            *[F.col(f.name).cast(f.dataType) for f in partial.schema]
-        )
+        partial = _cast_like(merge(state.unionByName(partial)), partial)
     # a touched bucket that aggregates to zero rows is not written, so
     # the commit removes it
     names = [f"__bucket={b}" for b in touched]
@@ -94,6 +92,11 @@ def _merge_touched_buckets(
     else:
         commit(state_path, names, write)
     return names
+
+
+def _cast_like(df: DataFrame, like: DataFrame) -> DataFrame:
+    """``df``'s columns named, ordered and typed as ``like``'s."""
+    return df.select(*[F.col(f.name).cast(f.dataType) for f in like.schema])
 
 
 def _with_bucket(df: DataFrame, keys: list[str], n_buckets: int) -> DataFrame:
@@ -214,4 +217,7 @@ def aggregating_merge_batch(
             ]
         )
 
-    return _merge_touched_buckets(merge(partial), merge, state_path, staged)
+    # stored in the view query's own types (the catalog reads the state
+    # with them): a sum of sums would widen a decimal again
+    first = _cast_like(merge(partial), partial)
+    return _merge_touched_buckets(first, merge, state_path, staged)

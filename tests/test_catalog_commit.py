@@ -386,6 +386,40 @@ def test_update_with_rand_keeps_view_equal_to_table(spark, tmp_path):
         assert _read(eng, view) == table
 
 
+NOW_STMTS = {
+    "insert_values": "INSERT INTO e VALUES (3, now())",
+    "insert_select": "INSERT INTO e SELECT k + 10, now() FROM e",
+    "update": "ALTER TABLE e UPDATE ts = now() WHERE k >= 2",
+}
+
+
+@pytest.mark.parametrize("name", list(NOW_STMTS))
+def test_now_keeps_views_equal_to_table(spark, tmp_path, name):
+    """``now()`` is fixed within one query but not across queries: the
+    views take the table's stored timestamps, not a second ``now()``."""
+    eng = _engine(spark, tmp_path)
+    for s in [
+        "CREATE TABLE e (k Int64, ts Datetime) ORDER BY (k)",
+        "INSERT INTO e VALUES (1, '2020-01-01 00:00:00'), "
+        "(2, '2020-01-02 00:00:00')",
+        "CREATE VIEW er UPDATE BY Replacing PRIMARY KEY (ts) ORDER BY (k) "
+        "AS SELECT k, ts FROM e",
+        "CREATE VIEW ea UPDATE BY Aggregating ORDER BY (k) "
+        "AS SELECT k, max(ts) AS ts FROM e GROUP BY k",
+        "CREATE VIEW ef UPDATE BY Summing ORDER BY (k) "
+        "AS SELECT k, max(ts) AS ts FROM e GROUP BY k",
+    ]:
+        eng.sql(s)
+    maintenance = [
+        eng.catalog._load_meta(v)["maintenance"] for v in ("er", "ea", "ef")
+    ]
+    assert maintenance == ["incremental", "incremental", "full"]
+    eng.sql(NOW_STMTS[name])
+    table = _read(eng, "e")
+    for view in ("er", "ea", "ef"):
+        assert _read(eng, view) == table
+
+
 def test_insert_refreshes_full_view_of_expression_partitioned_table(
     spark, tmp_path
 ):
@@ -396,6 +430,27 @@ def test_insert_refreshes_full_view_of_expression_partitioned_table(
     eng.sql("INSERT INTO t VALUES (3, 30), (1, 5)")
     assert _read(eng, "t") == (KV, sorted(ROWS + [(1, 5)]))
     assert _read(eng, "fv") == (KV, ROWS)
+
+
+@pytest.mark.parametrize("part,gone", [("k % 2", 0), ("k", 2)])
+def test_drop_partition_keeps_view_columns(spark, tmp_path, part, gone):
+    """The views over a table are derived from its surviving partitions
+    with the table's own columns, in order: no partition column moves
+    and no ``__part`` column appears."""
+    eng = _engine(spark, tmp_path)
+    for s in [
+        f"CREATE TABLE t (k Int64, v Int64) PARTITION BY {part}",
+        BASE[1],
+        # LIMIT keeps the view a full one
+        "CREATE VIEW fa UPDATE BY Summing ORDER BY (k) AS "
+        "SELECT * FROM t LIMIT 100",
+        INC_VIEW,
+    ]:
+        eng.sql(s)
+    assert eng.catalog._load_meta("fa")["maintenance"] == "full"
+    eng.sql(f"ALTER TABLE t DROP PARTITION {gone}")
+    after = (KV, [(1, 10), (3, 30)])
+    assert _read(eng, "t") == _read(eng, "fa") == _read(eng, "iv") == after
 
 
 def test_view_jobs_run_under_the_statement_job_group(spark, tmp_path):
@@ -488,6 +543,23 @@ def test_recover_inside_a_commit_keeps_it(spark, tmp_path, monkeypatch):
     after = (KV, [(1, 10), (2, 21), (3, 30), (4, 40)])
     assert _read(eng, "t") == after
     assert _read(_engine(spark, tmp_path), "t") == after
+    assert _commit_entries(tmp_path) == []
+
+
+def test_recover_finishes_a_commit_without_a_lock(spark, tmp_path):
+    """A commit written before commits took locks, whose process died
+    with the live table moved aside, is rolled back on the next open."""
+    eng = _engine(spark, tmp_path)
+    for s in BASE:
+        eng.sql(s)
+    root, cid = str(tmp_path), "0" * 32
+    old = cat._entry(root, cid, "old")
+    os.makedirs(cat._entry(root, cid, "new"))
+    os.makedirs(old)
+    cat._dump(cat._entry(root, cid, "plan"), {"t": True})
+    os.rename(os.path.join(root, "t"), os.path.join(old, "t"))
+    assert not os.path.exists(cat._entry(root, cid, "lock"))
+    assert _read(_engine(spark, tmp_path), "t") == (KV, ROWS)
     assert _commit_entries(tmp_path) == []
 
 

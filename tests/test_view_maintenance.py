@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from decimal import Decimal
 
 import pytest
 
@@ -255,6 +256,34 @@ def test_aggregating_view_filtered_delta(spark, tmp_path):
     eng.sql("insert into ag3 (k, v) values (1, 2), (2, 100)")
     got = {r["k"]: r["s"] for r in eng.sql("select k, s from agv3").collect()}
     assert got == {1: 10, 2: 106}  # v<=5 rows never contribute
+
+
+def test_aggregating_view_decimal_sums_read_after_insert(spark, tmp_path):
+    """The state keeps the view query's own types, the ones it is read
+    with: merging a sum into the state does not widen a decimal sum
+    (Decimal64 and UInt64 are decimals) a second time."""
+    from nutdb_spark.engine import NutEngine
+
+    eng = NutEngine(
+        spark, data_dir="/root/testdata/sf0.001", catalog_dir=str(tmp_path)
+    )
+    eng.sql("create table ag4 (k Int32, x Decimal64(2), u UInt64) ORDER BY (k)")
+    eng.sql(
+        "create view agv4 update by Aggregating order by (k) as "
+        "select k, sum(x) as sx, sum(u) as su, max(x) as hi "
+        "from ag4 group by k"
+    )
+    assert eng.catalog._load_meta("agv4")["maintenance"] == "incremental"
+    eng.sql("insert into ag4 (k, x, u) values (1, 1.25, 10), (2, 2.5, 7)")
+    eng.sql("insert into ag4 (k, x, u) values (1, 0.75, 5)")
+    got = {
+        r["k"]: (r["sx"], r["su"], r["hi"])
+        for r in eng.sql("select k, sx, su, hi from agv4").collect()
+    }
+    assert got == {
+        1: (Decimal("2.00"), 15, Decimal("1.25")),
+        2: (Decimal("2.50"), 7, Decimal("2.50")),
+    }
 
 
 # --- [EXT] plain (non-materialized) views ---------------------------------
