@@ -376,38 +376,9 @@ def _unionall_branches(q) -> list | None:
     return [q]
 
 
-def _walk_ast(node):
-    yield node
-    for f in getattr(node, "__dataclass_fields__", {}):
-        v = getattr(node, f)
-        items = v if isinstance(v, list) else [v]
-        for x in items:
-            if isinstance(x, tuple):
-                for y in x:
-                    if hasattr(y, "__dataclass_fields__"):
-                        yield from _walk_ast(y)
-            elif hasattr(x, "__dataclass_fields__"):
-                yield from _walk_ast(x)
-
-
-def _has_subquery(node) -> bool:
-    """Any subquery construct inside an expression tree (their value
-    depends on whole-table state, so a per-insert delta through them
-    would be silently wrong)."""
-    subqueries = (A.ScalarSubquery, A.Exists, A.InSubquery, A.QuantCompare)
-    return any(isinstance(n, subqueries) for n in _walk_ast(node))
-
-
 def _table_refs(node):
     """Every TableRef in a query tree."""
-    if isinstance(node, A.TableRef):
-        yield node
-    elif isinstance(node, (list, tuple)):
-        for x in node:
-            yield from _table_refs(x)
-    else:
-        for f in getattr(node, "__dataclass_fields__", {}):
-            yield from _table_refs(getattr(node, f))
+    return (n for n in A.walk(node) if isinstance(n, A.TableRef))
 
 
 def _branch_delta_ok(b) -> bool:
@@ -451,10 +422,10 @@ def _branch_delta_ok(b) -> bool:
         if j.kind != "inner" or not isinstance(j.source, A.TableRef):
             return False
     refs: dict[str, int] = {}
-    for node in _walk_ast(b):
+    for node in A.walk(b):
         if isinstance(node, A.TableRef):
             refs[node.name] = refs.get(node.name, 0) + 1
-        if isinstance(node, (A.Exists, A.InSubquery, A.ScalarSubquery)):
+        if isinstance(node, A.SUBQUERIES):
             return False
         if isinstance(node, A.WindowCall):
             # window results depend on the whole partition, not the
@@ -1160,7 +1131,11 @@ class Catalog:
             or not isinstance(b.from_.source, A.TableRef)
         ):
             return
-        if b.where is not None and _has_subquery(b.where):
+        # a subquery's value depends on whole-table state, so a
+        # per-insert delta through it would be silently wrong
+        if b.where is not None and any(
+            isinstance(n, A.SUBQUERIES) for n in A.walk(b.where)
+        ):
             return
         group_names = set()
         for g in b.group_by:
@@ -1556,7 +1531,7 @@ class Catalog:
             keys = set(meta["order_by"] or [])
             if meta["partition_by"]:
                 pe = Parser(meta["partition_by"]).parse_expr()
-                keys |= {n.name for n in _walk_ast(pe) if isinstance(n, A.Ident)}
+                keys |= {n.name for n in A.walk(pe) if isinstance(n, A.Ident)}
             if stmt.payload in keys:
                 raise CatalogError(
                     f"cannot drop column {stmt.payload!r}: the table's "
@@ -1578,7 +1553,7 @@ class Catalog:
                     meta[key] = [new if k == old else k for k in meta[key]]
             if meta["partition_by"]:
                 pe = Parser(meta["partition_by"]).parse_expr()
-                for n in _walk_ast(pe):
+                for n in A.walk(pe):
                     if isinstance(n, A.Ident) and n.name == old:
                         n.name = new
                 meta["partition_by"] = printer.expr(pe)
@@ -1710,8 +1685,6 @@ class Catalog:
         otherwise); the cardinality check is ONE aggregate over the
         join (max matches per target row id — a 1-row driver value);
         inserts ride INSERT…SELECT. Nothing row-at-a-time."""
-        import copy as _copy
-
         meta = self._load_meta(stmt.table)
         if meta is None or meta["type"] != "table":
             raise CatalogError(f"unknown table {stmt.table!r}")
@@ -1743,73 +1716,39 @@ class Catalog:
         if src_name is not None:
             s_names.add(src_name)
 
-        def rw(node):
-            node = _copy.deepcopy(node)
-
-            def walk(e):
-                if isinstance(e, A.Ident):
-                    if e.qualifier in s_names:
-                        if e.name not in scols:
-                            raise CatalogError(
-                                f"unknown source column {e.name!r}"
-                            )
-                        return A.Ident(pfx + e.name, None)
-                    if e.qualifier in t_names:
-                        if e.name not in tcols:
-                            raise CatalogError(
-                                f"unknown target column {e.name!r}"
-                            )
-                        return A.Ident(e.name, None)
-                    if e.qualifier is None:
-                        if e.name in tcols and e.name in scols:
-                            raise CatalogError(
-                                f"ambiguous MERGE column {e.name!r}: "
-                                "qualify it with the target or source "
-                                "alias"
-                            )
-                        if e.name in scols:
-                            return A.Ident(pfx + e.name, None)
-                        return e
-                    return e
-                if not hasattr(e, "__dataclass_fields__"):
-                    return e
-                for f in e.__dataclass_fields__:
-                    v = getattr(e, f)
-                    if isinstance(v, list):
-                        setattr(
-                            e, f,
-                            [walk(x) if hasattr(
-                                x, "__dataclass_fields__"
-                            ) else x for x in v],
-                        )
-                    elif hasattr(v, "__dataclass_fields__"):
-                        setattr(e, f, walk(v))
+        def rw(e):
+            """A MERGE column reference in the joined frame's names
+            (a subquery keeps its own: the lowering rejects it here)."""
+            if isinstance(e, A.SUBQUERIES):
                 return e
-
-            return walk(node)
-
-        def _refs_source(e) -> bool:
-            if isinstance(e, A.Ident):
-                return e.qualifier is None and e.name.startswith(pfx)
-            if not hasattr(e, "__dataclass_fields__"):
-                return False
-            for f in e.__dataclass_fields__:
-                v = getattr(e, f)
-                if isinstance(v, list):
-                    if any(
-                        _refs_source(x)
-                        for x in v
-                        if hasattr(x, "__dataclass_fields__")
-                    ):
-                        return True
-                elif hasattr(v, "__dataclass_fields__"):
-                    if _refs_source(v):
-                        return True
-            return False
+            if not isinstance(e, A.Ident):
+                return None
+            if e.qualifier in s_names:
+                if e.name not in scols:
+                    raise CatalogError(f"unknown source column {e.name!r}")
+                return A.Ident(pfx + e.name, None)
+            if e.qualifier in t_names:
+                if e.name not in tcols:
+                    raise CatalogError(f"unknown target column {e.name!r}")
+                return A.Ident(e.name, None)
+            if e.qualifier is None:
+                if e.name in tcols and e.name in scols:
+                    raise CatalogError(
+                        f"ambiguous MERGE column {e.name!r}: qualify it "
+                        "with the target or source alias"
+                    )
+                if e.name in scols:
+                    return A.Ident(pfx + e.name, None)
+            return e
 
         def compile_(node, forbid_source: bool = False) -> Column:
-            r = rw(node)
-            if forbid_source and _refs_source(r):
+            r = A.replace(node, rw)
+            if forbid_source and any(
+                isinstance(n, A.Ident)
+                and n.qualifier is None
+                and n.name.startswith(pfx)
+                for n in A.walk(r)
+            ):
                 raise CatalogError(
                     "WHEN NOT MATCHED BY SOURCE expressions may reference "
                     "target columns only"

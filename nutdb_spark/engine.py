@@ -23,6 +23,7 @@ from nutdb_spark.catalog import Catalog, CatalogError
 from nutdb_spark.frontend import ast_nodes as A
 from nutdb_spark.frontend.lower import Lowerer, LoweringError
 from nutdb_spark.frontend.parser import parse
+from nutdb_spark.functions.registry import NONDETERMINISTIC
 from nutdb_spark.sources.tables import TABLES, load_table
 
 
@@ -143,65 +144,25 @@ class NutEngine:
             mapping[base_col] = alias or base_col
         return vq.from_.source.name, mapping
 
-    # Nondeterministic functions can never appear in a rewritten
-    # predicate: the view holds MERGED rows, so `WHERE rand() < 0.5`
-    # would filter merged rows instead of base rows — a different
-    # result distribution, not just a different sample.
-    _NONDET_FNS = frozenset(
-        {
-            "rand", "random", "randcanonical", "randconstant",
-            "randuniform", "randnormal", "uuid", "generateuuidv4",
-            "now", "now64", "today", "yesterday",
-            "currenttimestamp", "current_timestamp",
-            "randomstring", "randomprintableascii",
-            "monotonically_increasing_id", "rownumberinallblocks",
-        }
-    )
-
     @staticmethod
     def _where_idents(node, acc: set) -> bool:
         """Collect unqualified Ident names; False on anything a key
         predicate can't contain (subqueries, window calls,
-        nondeterministic function calls)."""
-        import dataclasses as _dc
-
-        if isinstance(node, A.Ident):
-            if node.qualifier:
+        nondeterministic function calls: the view holds MERGED rows,
+        so `WHERE rand() < 0.5` would filter merged rows instead of
+        base rows — a different result distribution, not just a
+        different sample)."""
+        for n in A.walk(node):
+            if isinstance(n, (*A.SUBQUERIES, A.WindowCall)) or (
+                isinstance(n, A.FnCall)
+                and n.name.lower() in NONDETERMINISTIC
+            ):
                 return False
-            acc.add(node.name)
-            return True
-        if isinstance(
-            node, (A.ScalarSubquery, A.InSubquery, A.Exists, A.WindowCall)
-        ):
-            return False
-        if (
-            isinstance(node, A.FnCall)
-            and node.name.lower() in NutEngine._NONDET_FNS
-        ):
-            return False
-        if _dc.is_dataclass(node):
-            return all(
-                NutEngine._where_idents(getattr(node, f.name), acc)
-                for f in _dc.fields(node)
-            )
-        if isinstance(node, (list, tuple)):
-            return all(NutEngine._where_idents(x, acc) for x in node)
+            if isinstance(n, A.Ident):
+                if n.qualifier:
+                    return False
+                acc.add(n.name)
         return True
-
-    @staticmethod
-    def _rename_idents(node, ren: dict):
-        import dataclasses as _dc
-
-        if isinstance(node, A.Ident):
-            if node.name in ren:
-                node.name = ren[node.name]
-            return
-        if _dc.is_dataclass(node):
-            for f in _dc.fields(node):
-                NutEngine._rename_idents(getattr(node, f.name), ren)
-        elif isinstance(node, (list, tuple)):
-            for x in node:
-                NutEngine._rename_idents(x, ren)
 
     def _try_projection_rewrite(self, q):
         """Rewrite `SELECT k…, agg(v)… FROM base [WHERE on keys] GROUP
@@ -279,8 +240,6 @@ class NutEngine:
         return None
 
     def _match_view(self, meta, base, keys, items, wcols, q):
-        import copy as _copy
-
         try:
             vq = self.catalog.view_query(meta)
         except CatalogError:
@@ -354,19 +313,22 @@ class NutEngine:
                     (A.FnCall(reagg, [A.Ident(vc)]), alias or c.name)
                 )
         ren = {k: colmap[k] for k in set(keys) | wcols}
-        new_where = _copy.deepcopy(q.where)
-        if new_where is not None:
-            self._rename_idents(new_where, ren)
-        new_order = _copy.deepcopy(q.order_by)
-        for o in new_order:
-            self._rename_idents(o.expr, ren)
+
+        def renamed(n):
+            if isinstance(n, A.Ident) and n.name in ren:
+                return A.Ident(ren[n.name], n.qualifier)
+            return None
+
         return _dc_replace(
             q,
             columns=new_cols,
             from_=A.FromClause(A.TableRef(meta["name"])),
-            where=new_where,
+            where=None if q.where is None else A.replace(q.where, renamed),
             group_by=[A.Ident(colmap[k]) for k in keys],
-            order_by=new_order,
+            order_by=[
+                _dc_replace(o, expr=A.replace(o.expr, renamed))
+                for o in q.order_by
+            ],
         )
 
     # --- entry ------------------------------------------------------------

@@ -1,11 +1,19 @@
 """NutDB dialect AST — Python mirror of the reference's typed AST
-(/root/reference/src/parser/ast/*.rs, 607 LoC). One dataclass per
-node; field names follow the reference where readable.
+(src/parser/ast/*.rs, 607 LoC). One dataclass per node; field names
+follow the reference where readable.
+
+:func:`children`, :func:`walk` and :func:`replace` (end of module) are
+the one way to traverse a tree: they know every container shape a node
+field takes (a node, or lists and tuples of nodes at any depth, e.g.
+``Case.whens``, ``OrderItem.fill``, MERGE clauses, VALUES rows).
+Callers keep their own stop rules; :data:`SUBQUERIES` names the nodes
+whose value depends on a whole query.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from dataclasses import replace as _rebuild
 
 # --- expressions (ast/expr.rs, ast/item.rs:126-178) -----------------------
 
@@ -575,3 +583,65 @@ class BackupStmt:
     name: str
     path: str
     restore: bool = False
+
+
+# --- traversal -------------------------------------------------------------
+
+# Nodes that evaluate a whole query: their value depends on every row
+# of it, never on the row at hand alone.
+SUBQUERIES = (ScalarSubquery, Exists, InSubquery, QuantCompare)
+
+
+def _nodes(v):
+    """The nodes in one field value: the value itself, or the nodes in
+    its lists and tuples at any depth."""
+    if hasattr(v, "__dataclass_fields__"):
+        yield v
+    elif isinstance(v, (list, tuple)):
+        for x in v:
+            yield from _nodes(x)
+
+
+def children(node):
+    """Every node directly below ``node``, in field order."""
+    for f in getattr(node, "__dataclass_fields__", ()):
+        yield from _nodes(getattr(node, f))
+
+
+def walk(node, stop=()):
+    """``node`` and every node below it, pre-order; a node of a ``stop``
+    type is yielded but not descended."""
+    todo = [node]
+    while todo:
+        n = todo.pop()
+        yield n
+        if not isinstance(n, stop):
+            todo.extend(reversed(list(children(n))))
+
+
+def replace(node, fn):
+    """The tree with each node ``n`` for which ``fn(n)`` returns a node
+    replaced by that node (not descended); where ``fn`` returns None the
+    node is rebuilt from its replaced children. Unchanged subtrees are
+    shared with ``node``, which is never mutated."""
+    new = fn(node)
+    if new is not None:
+        return new
+    changed = {}
+    for f in node.__dataclass_fields__:
+        v = getattr(node, f)
+        r = _replace_in(v, fn)
+        if r is not v:
+            changed[f] = r
+    return _rebuild(node, **changed) if changed else node
+
+
+def _replace_in(v, fn):
+    if hasattr(v, "__dataclass_fields__"):
+        return replace(v, fn)
+    if isinstance(v, (list, tuple)):
+        items = [_replace_in(x, fn) for x in v]
+        if all(a is b for a, b in zip(items, v)):
+            return v
+        return tuple(items) if isinstance(v, tuple) else items
+    return v

@@ -32,6 +32,7 @@ from nutdb_spark.frontend import ast_nodes as A
 from nutdb_spark.functions import textfns as _textfns  # noqa: F401 — registers [EXT] names
 from nutdb_spark.functions.registry import (
     AGGREGATE_FNS,
+    NONDETERMINISTIC,
     PARAMETRIC_AGGS,
     SCALAR_FNS,
 )
@@ -782,11 +783,9 @@ class Lowerer:
         earlier ones. Subqueries keep their own scope — substitution
         stops at any nested query boundary — and the WITH alias takes
         precedence over a same-named column, matching ClickHouse."""
-        import copy as _copy
-
         bound: dict[str, object] = {}
         for name, expr in q.expr_aliases:
-            bound[name] = self._subst_expr(_copy.deepcopy(expr), bound)
+            bound[name] = self._subst_expr(expr, bound)
         # one-shot: iterative lowerings (recursive CTE rounds) re-lower
         # the SAME AST — a second substitution pass over an already
         # substituted tree would double-apply self-referential aliases
@@ -821,40 +820,6 @@ class Lowerer:
             if getattr(j, "on", None) is not None:
                 j.on = self._subst_expr(j.on, bound)
 
-    # scalar generators whose per-row value must not be shared between
-    # occurrences (and must never be collapsed): never CSE a subtree
-    # containing one
-    _CSE_NONDET = frozenset(
-        {
-            "rand",
-            "rand64",
-            "randcanonical",
-            "randuniform",
-            "randnormal",
-            "random",
-            "uuid",
-            "generateuuidv4",
-            "now",
-            "today",
-            "yesterday",
-        }
-    )
-
-    @staticmethod
-    def _ast_children(node):
-        for f in node.__dataclass_fields__:
-            v = getattr(node, f)
-            if hasattr(v, "__dataclass_fields__"):
-                yield v
-            elif isinstance(v, list):
-                for x in v:
-                    if isinstance(x, tuple):
-                        for y in x:
-                            if hasattr(y, "__dataclass_fields__"):
-                                yield y
-                    elif hasattr(x, "__dataclass_fields__"):
-                        yield x
-
     def _bind_common_subexprs(self, sel_items, base, scope):
         """[OPT r13] Common-subexpression binding for plain
         (non-aggregate, non-window) projections: a deterministic
@@ -867,47 +832,37 @@ class Lowerer:
         ``geohashEncode(...)`` re-ran the 30-step bisection fold per
         reference (guide §4.1/§7.2: duplicated subtrees).
 
-        Operates on DEEPCOPIES (the AST may be re-lowered by
-        recursive-CTE rounds) keyed by the dialect printer's text;
-        skips the pass entirely when the select list carries
-        wildcards/COLUMNS() (a bound temp column would leak into
-        ``*``) or window calls (separate lowering machinery), and
+        Rebuilds the items without mutating them (the AST may be
+        re-lowered by recursive-CTE rounds), keyed by the dialect
+        printer's text; skips the pass entirely when the select list
+        carries wildcards/COLUMNS() (a bound temp column would leak
+        into ``*``) or window calls (separate lowering machinery), and
         never keys subtrees inside lambda bodies, containing
         subqueries, or containing nondeterministic generators."""
-        import copy as _copy
-
         from nutdb_spark.frontend import printer as _P
 
         for e, _a in sel_items:
-            blockers = [e]
-            while blockers:
-                n = blockers.pop()
-                if isinstance(n, (A.Wildcard, A.WindowCall)):
-                    return sel_items, base
-                if (
-                    isinstance(n, A.FnCall)
-                    and n.name.lower() == "columns"
+            for n in A.walk(e):
+                if isinstance(n, (A.Wildcard, A.WindowCall)) or (
+                    isinstance(n, A.FnCall) and n.name.lower() == "columns"
                 ):
                     return sel_items, base
-                blockers.extend(self._ast_children(n))
-
-        _SUBQ = (A.ScalarSubquery, A.Exists, A.InSubquery, A.QuantCompare)
 
         def collect(n, counts, reps, in_lambda):
             """Post-order walk; returns False if the subtree must not
             be keyed (subquery / nondet inside)."""
-            if isinstance(n, _SUBQ):
+            if isinstance(n, A.SUBQUERIES):
                 return False
             if isinstance(n, A.Lambda):
-                for c in self._ast_children(n):
+                for c in A.children(n):
                     collect(c, counts, reps, True)
                 return True  # self-contained: doesn't poison parents
             clean = True
-            for c in self._ast_children(n):
+            for c in A.children(n):
                 if not collect(c, counts, reps, in_lambda):
                     clean = False
             if isinstance(n, A.FnCall):
-                if n.name.lower() in self._CSE_NONDET:
+                if n.name.lower() in NONDETERMINISTIC:
                     return False
                 if clean and not in_lambda:
                     try:
@@ -918,49 +873,23 @@ class Lowerer:
                     reps.setdefault(k, n)
             return clean
 
-        def subst(n, key, name):
-            if isinstance(n, (A.Lambda, *_SUBQ)):
+        def bind(n):
+            """The round's temp column for an occurrence of its key."""
+            if isinstance(n, (A.Lambda, *A.SUBQUERIES)):
                 return n
             if isinstance(n, A.FnCall):
                 try:
                     if _P.expr(n) == key:
-                        return A.Ident(name=name)
+                        return A.Ident(name=tmp)
                 except Exception:  # noqa: BLE001
                     pass
-            if not hasattr(n, "__dataclass_fields__"):
-                return n
-            for f in n.__dataclass_fields__:
-                v = getattr(n, f)
-                if hasattr(v, "__dataclass_fields__"):
-                    setattr(n, f, subst(v, key, name))
-                elif isinstance(v, list):
-                    setattr(
-                        n,
-                        f,
-                        [
-                            tuple(
-                                subst(y, key, name)
-                                if hasattr(y, "__dataclass_fields__")
-                                else y
-                                for y in x
-                            )
-                            if isinstance(x, tuple)
-                            else (
-                                subst(x, key, name)
-                                if hasattr(x, "__dataclass_fields__")
-                                else x
-                            )
-                            for x in v
-                        ],
-                    )
-            return n
+            return None
 
-        items = None
+        items = sel_items
         for _ in range(8):  # largest-first, re-counted per round
-            probe = items if items is not None else sel_items
             counts: dict = {}
             reps: dict = {}
-            for e, _a in probe:
+            for e, _a in items:
                 collect(e, counts, reps, False)
             cands = [
                 k
@@ -970,71 +899,41 @@ class Lowerer:
             if not cands:
                 break
             key = max(cands, key=len)
-            if items is None:
-                items = [
-                    (_copy.deepcopy(e), a) for e, a in sel_items
-                ]
             tmp = f"__cse{len(base.columns)}_{abs(hash(key)) % 10**6}"
             col, base = self._expr_with_scalars(
                 reps[key], base, scope, {}, []
             )
             base = base.withColumn(tmp, col)
-            items = [(subst(e, key, tmp), a) for e, a in items]
-        return (items if items is not None else sel_items), base
+            items = [(A.replace(e, bind), a) for e, a in items]
+        return items, base
 
     def _subst_expr(self, node, bound: dict):
+        """``node`` with a copy of ``bound[name]`` for each unqualified
+        Ident(name), outside subqueries and wildcards."""
         import copy as _copy
 
-        if isinstance(node, A.Ident) and node.qualifier is None:
-            hit = bound.get(node.name)
-            if hit is not None:
-                return _copy.deepcopy(hit)
-            return node
-        if isinstance(
-            node, (A.ScalarSubquery, A.Exists, A.InSubquery,
-                   A.QuantCompare, A.Lit, A.Param, A.Wildcard,
-                   A.Interval)
-        ):
-            return node
-        if isinstance(node, A.Lambda):
-            # lambda parameters shadow WITH aliases inside the body
-            inner = {k: v for k, v in bound.items() if k not in node.params}
-            if hasattr(node.body, "__dataclass_fields__"):
-                node.body = self._subst_expr(node.body, inner)
-            return node
-        if not hasattr(node, "__dataclass_fields__"):
-            return node
-        for f in node.__dataclass_fields__:
-            v = getattr(node, f)
-            if isinstance(v, list):
-                setattr(
-                    node,
-                    f,
-                    [
-                        tuple(
-                            self._subst_expr(y, bound)
-                            if hasattr(y, "__dataclass_fields__")
-                            else y
-                            for y in x
-                        )
-                        if isinstance(x, tuple)
-                        else (
-                            self._subst_expr(x, bound)
-                            if hasattr(x, "__dataclass_fields__")
-                            else x
-                        )
-                        for x in v
-                    ],
-                )
-            elif hasattr(v, "__dataclass_fields__"):
-                setattr(node, f, self._subst_expr(v, bound))
-        return node
+        def fn(n):
+            if isinstance(n, A.Ident):
+                hit = bound.get(n.name) if n.qualifier is None else None
+                return n if hit is None else _copy.deepcopy(hit)
+            if isinstance(n, (*A.SUBQUERIES, A.Wildcard)):
+                return n
+            if isinstance(n, A.Lambda):
+                # lambda parameters shadow WITH aliases inside the body
+                inner = {k: v for k, v in bound.items() if k not in n.params}
+                return A.Lambda(n.params, self._subst_expr(n.body, inner))
+            return None
+
+        return A.replace(node, fn)
 
     def _lower_cte(self, c: A.Cte, outer) -> DataFrame:
         """A later CTE sees every earlier one (the frame is already on
         the stack); a RECURSIVE self-referencing CTE lowers to an
         iterative fixpoint."""
-        if getattr(c, "recursive", False) and _refs_table(c.query, c.name):
+        if getattr(c, "recursive", False) and any(
+            isinstance(n, A.TableRef) and n.name == c.name
+            for n in A.walk(c.query)
+        ):
             return self._lower_recursive_cte(c, outer)
         return self.lower_query(c.query, outer)
 
@@ -1182,8 +1081,6 @@ class Lowerer:
         # reference to one keeps failing loudly at resolution). Same
         # column-wins precedence as the GROUP BY/HAVING alias rules.
         if getattr(q, "prewhere", None) is not None or q.where is not None:
-            import copy as _copy
-
             _pb: dict = {}
             for _e, _a in q.columns:
                 if (
@@ -1195,16 +1092,12 @@ class Lowerer:
                 _probe: list = []
                 self._collect_aggs(_e, _probe)
                 if not _probe:
-                    _pb[_a] = _copy.deepcopy(_e)
+                    _pb[_a] = _e
             if _pb:
                 if getattr(q, "prewhere", None) is not None:
-                    q.prewhere = self._subst_expr(
-                        _copy.deepcopy(q.prewhere), _pb
-                    )
+                    q.prewhere = self._subst_expr(q.prewhere, _pb)
                 if q.where is not None:
-                    q.where = self._subst_expr(
-                        _copy.deepcopy(q.where), _pb
-                    )
+                    q.where = self._subst_expr(q.where, _pb)
         if getattr(q, "prewhere", None) is not None:
             base = self._lower_predicate(base, q.prewhere, scope)
         # WHERE: decompose into subquery conjuncts + plain predicate
@@ -1258,8 +1151,6 @@ class Lowerer:
             # register in the aggregate hoist). Same column-wins
             # precedence as GROUP BY aliases; idempotent because the
             # substituted tree contains no matching idents.
-            import copy as _copy
-
             hav_bound = {
                 a: e
                 for e, a in q.columns
@@ -1268,10 +1159,7 @@ class Lowerer:
                 and a not in base.columns
             }
             if hav_bound:
-                q.having = self._subst_expr(
-                    _copy.deepcopy(q.having),
-                    {k: _copy.deepcopy(v) for k, v in hav_bound.items()},
-                )
+                q.having = self._subst_expr(q.having, hav_bound)
             self._collect_aggs(q.having, agg_calls)
         for o in q.order_by:
             self._collect_aggs(o.expr, agg_calls)
@@ -2025,47 +1913,30 @@ class Lowerer:
         None (no column references — a literal). Mixed references or
         columns resolvable on neither side raise."""
         sides: set[str] = set()
-
-        def walk(node):
-            if isinstance(node, A.Ident):
-                if node.qualifier is not None:
-                    if node.qualifier == alias:
-                        sides.add("r")
-                    elif node.qualifier in left_aliases:
-                        sides.add("l")
-                    else:
-                        raise LoweringError(
-                            f"unknown alias {node.qualifier!r} in ASOF ON"
-                        )
+        for node in A.walk(e):
+            if not isinstance(node, A.Ident):
+                continue
+            if node.qualifier is not None:
+                if node.qualifier == alias:
+                    sides.add("r")
+                elif node.qualifier in left_aliases:
+                    sides.add("l")
                 else:
-                    in_l = node.name in base.columns
-                    in_r = node.name in right.columns
-                    if in_l and in_r:
-                        raise LoweringError(
-                            f"ambiguous column {node.name!r} in ASOF ON — qualify it"
-                        )
-                    if not (in_l or in_r):
-                        raise LoweringError(
-                            f"unknown column {node.name!r} in ASOF ON"
-                        )
-                    sides.add("l" if in_l else "r")
-                return
-            if isinstance(node, (A.Lit, A.Param, A.Interval)):
-                return
-            for f in getattr(node, "__dataclass_fields__", {}):
-                v = getattr(node, f)
-                if isinstance(v, list):
-                    for x in v:
-                        if isinstance(x, tuple):
-                            for y in x:
-                                if hasattr(y, "__dataclass_fields__"):
-                                    walk(y)
-                        elif hasattr(x, "__dataclass_fields__"):
-                            walk(x)
-                elif hasattr(v, "__dataclass_fields__"):
-                    walk(v)
-
-        walk(e)
+                    raise LoweringError(
+                        f"unknown alias {node.qualifier!r} in ASOF ON"
+                    )
+            else:
+                in_l = node.name in base.columns
+                in_r = node.name in right.columns
+                if in_l and in_r:
+                    raise LoweringError(
+                        f"ambiguous column {node.name!r} in ASOF ON — qualify it"
+                    )
+                if not (in_l or in_r):
+                    raise LoweringError(
+                        f"unknown column {node.name!r} in ASOF ON"
+                    )
+                sides.add("l" if in_l else "r")
         if len(sides) > 1:
             raise LoweringError(
                 "an ASOF ON operand may not mix columns from both sides"
@@ -2139,33 +2010,15 @@ class Lowerer:
 
     def _refs_outer(self, e, inner_cols: set[str], sub_scope: Scope) -> bool:
         inner_aliases = set(sub_scope.frames)
-        found = False
-
-        def walk(node):
-            nonlocal found
-            if isinstance(node, A.Ident):
-                if node.qualifier is not None:
-                    if node.qualifier not in inner_aliases:
-                        found = True
-                elif node.name not in inner_cols:
-                    found = True
-                return
-            if isinstance(node, (A.Lit, A.Param, A.Interval, A.Wildcard)):
-                return
-            for f in getattr(node, "__dataclass_fields__", {}):
-                v = getattr(node, f)
-                if isinstance(v, list):
-                    for x in v:
-                        if isinstance(x, tuple):
-                            for y in x:
-                                walk(y)
-                        else:
-                            walk(x)
-                else:
-                    walk(v)
-
-        walk(e)
-        return found
+        return any(
+            isinstance(n, A.Ident)
+            and (
+                n.qualifier not in inner_aliases
+                if n.qualifier is not None
+                else n.name not in inner_cols
+            )
+            for n in A.walk(e, stop=A.Wildcard)
+        )
 
     def _lower_in_subquery(self, base, node: A.InSubquery, scope: Scope):
         sub_q = node.query
@@ -2555,36 +2408,19 @@ class Lowerer:
     # --- aggregation ------------------------------------------------------
 
     def _collect_aggs(self, e, out: list) -> None:
-        if isinstance(e, A.WindowCall):
-            # a window aggregate is evaluated per-row over its frame,
-            # not as a GROUP BY aggregate — never hoist it
-            return
-        if isinstance(e, A.Lambda):
-            # lambda bodies are element-wise inside a higher-order fn,
-            # never GROUP BY aggregates
-            return
         if isinstance(e, A.FnCall) and e.name.lower() in _AGG_NAMES:
             if not any(e == seen for seen, _ in out):
                 out.append((e, f"__a{len(out)}"))
             return  # no nested aggregates in the dialect
-        if isinstance(e, (A.Lit, A.Param, A.Ident, A.Wildcard, A.Interval)):
-            return
-        if isinstance(e, (A.ScalarSubquery, A.Exists, A.InSubquery,
-                          A.QuantCompare)):
-            # a subquery's aggregates belong to ITS OWN query block, not
-            # the enclosing select — don't hoist them outward
-            return
-        for f in getattr(e, "__dataclass_fields__", {}):
-            v = getattr(e, f)
-            if isinstance(v, list):
-                for x in v:
-                    if isinstance(x, tuple):
-                        for y in x:
-                            self._collect_aggs(y, out)
-                    elif hasattr(x, "__dataclass_fields__"):
-                        self._collect_aggs(x, out)
-            elif hasattr(v, "__dataclass_fields__"):
-                self._collect_aggs(v, out)
+        # not below: a window aggregate is evaluated per-row over its
+        # frame, a lambda body element-wise inside a higher-order fn,
+        # a subquery's aggregates belong to ITS OWN query block, and a
+        # wildcard's REPLACE items are never GROUP BY aggregates
+        if not isinstance(
+            e, (A.WindowCall, A.Lambda, A.Wildcard, *A.SUBQUERIES)
+        ):
+            for c in A.children(e):
+                self._collect_aggs(c, out)
 
     def _lower_aggregate(self, base, q, agg_calls, scope):
         """Lower a GROUP BY (or a global aggregate) as aggregate
@@ -3736,20 +3572,6 @@ class Lowerer:
         if isinstance(e, A.FnCall):
             return e.name
         return "expr"
-
-
-def _refs_table(node, name: str) -> bool:
-    """Does the (sub)tree reference table `name` in any FROM/JOIN?"""
-    if isinstance(node, A.TableRef):
-        return node.name == name
-    if isinstance(node, (str, int, float, bool, bytes)) or node is None:
-        return False
-    if isinstance(node, (list, tuple)):
-        return any(_refs_table(x, name) for x in node)
-    for f in getattr(node, "__dataclass_fields__", {}):
-        if _refs_table(getattr(node, f), name):
-            return True
-    return False
 
 
 _AGG_NAMES = {n.lower() for n in AGGREGATE_FNS} | {

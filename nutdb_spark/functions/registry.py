@@ -1561,6 +1561,17 @@ SCALAR_FNS["randCanonical"] = F.rand
 SCALAR_FNS["randUniform"] = lambda a, b: a + F.rand() * (b - a)
 SCALAR_FNS["randNormal"] = lambda m, s: m + F.randn() * s
 
+# Every nondeterministic function above (lower-cased, as the frontend
+# looks names up): two evaluations of one call may differ, so a call
+# is never shared between occurrences, nor answered from merged rows.
+NONDETERMINISTIC = frozenset(
+    n.lower()
+    for n in (
+        "random", "now", "today", "yesterday", "uuid", "generateUUIDv4",
+        "rand", "rand64", "randCanonical", "randUniform", "randNormal",
+    )
+)
+
 
 def _group_array_sorted(params: list, x: Column) -> Column:
     """groupArraySorted(n)(x) — the n smallest values ascending,

@@ -18,6 +18,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """20g, or half the physical memory if that is less."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    except (ValueError, OSError):
+        return "20g"
+    return f"{min(20 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "nutdb_spark",
     *,
@@ -47,11 +56,14 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # local[] has no separate executors — the driver heap IS the
-        # cluster. 20g (box has 128 GiB) keeps a full-suite bench pass
-        # out of GC pressure; at r13 close the 375-entry run showed
-        # late-suite stateful-stream entries 3-5x their isolated cost
-        # under the old 8g heap.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "20g"))
+        # cluster. 20g keeps a full-suite bench pass out of GC pressure
+        # (the 375-entry run showed late-suite stateful-stream entries
+        # 3-5x their isolated cost under an 8g heap); on a smaller
+        # machine, half its memory, so the JVM is not OOM-killed.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # PySpark records a Python call site for every DataFrame and
         # functions call (several py4j round trips each); every one of

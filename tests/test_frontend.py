@@ -94,6 +94,59 @@ def test_reference_corpus_parses(n):
     parse(sql)  # must not raise
 
 
+# --- AST traversal ----------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT CASE WHEN a > 1 THEN zz ELSE 0 END FROM t",
+        "SELECT {'k': zz} FROM t",
+        "SELECT * REPLACE (zz + 1 AS a) FROM t",
+        "SELECT a FROM t ORDER BY a WITH FILL FROM zz TO 10",
+        "SELECT a FROM t SAMPLE 0.5 BY (zz)",
+        "WITH zz + 1 AS x SELECT x FROM t",
+        "WITH x AS (SELECT a FROM zz) SELECT a FROM x",
+        "SELECT a, b FROM t ORDER BY a WITH FILL INTERPOLATE (b AS zz + 1)",
+        "MERGE INTO t USING s ON t.id = s.id "
+        "WHEN MATCHED AND s.v > 0 THEN UPDATE SET v = zz",
+        "MERGE INTO t USING s ON t.id = s.id "
+        "WHEN NOT MATCHED THEN INSERT (v) VALUES (zz)",
+        "MERGE INTO t USING s ON t.id = s.id "
+        "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = zz",
+        "INSERT INTO t VALUES (1, 'a'), (2, zz + 1)",
+        "SELECT * FROM (VALUES (1, zz)) AS v(a, b)",
+    ],
+)
+def test_walk_and_replace_reach_every_container(sql):
+    """An Ident or TableRef named zz planted in each container shape a
+    node field takes (lists, tuples, tuples in lists, nested tuples,
+    lists of lists) is reached by walk and rebuilt by replace."""
+
+    def names(tree):
+        return {
+            n.name for n in A.walk(tree)
+            if isinstance(n, (A.Ident, A.TableRef))
+        }
+
+    def rename(n):
+        if isinstance(n, (A.Ident, A.TableRef)) and n.name == "zz":
+            return type(n)("yy")
+        return None
+
+    stmt = parse(sql)
+    assert "zz" in names(stmt)
+    assert A.replace(stmt, lambda n: None) == stmt
+    renamed = A.replace(stmt, rename)
+    assert "yy" in names(renamed) and "zz" not in names(renamed)
+    assert "zz" in names(stmt)  # replace never mutates its input
+    # a stop type is yielded but not descended
+    assert not any(
+        isinstance(n, (A.Ident, A.TableRef))
+        for n in A.walk(stmt, stop=type(stmt))
+    )
+
+
 # --- parser semantics -----------------------------------------------------
 
 

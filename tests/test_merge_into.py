@@ -217,6 +217,28 @@ def test_merge_by_source_rejects_source_refs(eng):
         )
 
 
+def test_merge_case_over_source_columns(eng):
+    """Column references inside CASE branches (tuples in a list) are
+    rewritten like any other: the source's `s.v` resolves."""
+    _mk(eng, "(1,'a',10), (2,'b',20)", "(1,'a',5), (2,'b',7)")
+    eng.sql(
+        "MERGE INTO mt AS t USING ms AS s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET "
+        "v = CASE WHEN s.v > 6 THEN s.v ELSE t.v END"
+    )
+    assert _rows(eng) == [(1, "a", 10), (2, "b", 7)]
+
+
+def test_merge_by_source_rejects_source_refs_inside_case(eng):
+    _mk(eng, "(1,'a',10)", "(2,'b',2)")
+    with pytest.raises(CatalogError, match="target columns only"):
+        eng.sql(
+            "MERGE INTO mt AS t USING ms AS s ON t.id = s.id "
+            "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET "
+            "v = CASE WHEN s.v > 6 THEN 1 ELSE t.v END"
+        )
+
+
 def test_merge_by_source_parse_errors():
     with pytest.raises(ParseError, match="SOURCE or TARGET"):
         parse(

@@ -268,11 +268,12 @@ def test_no_rewrite_on_nondeterministic_where(eng):
     """WHERE rand() < x must filter BASE rows, not merged view rows —
     a different result distribution. The rewrite must stand down on
     any nondeterministic call in WHERE or ORDER BY."""
-    df = eng.sql(
-        "SELECT region, sum(qty) AS q FROM pr_sales "
-        "WHERE rand() <= 1.0 GROUP BY region"
-    )
-    assert not _reads_view(_plan(df))
+    for pred in ("rand() <= 1.0", "rand64() % 2 = 0"):
+        df = eng.sql(
+            "SELECT region, sum(qty) AS q FROM pr_sales "
+            f"WHERE {pred} GROUP BY region"
+        )
+        assert not _reads_view(_plan(df)), pred
     # deterministic predicates keep firing
     df2 = eng.sql(
         "SELECT region, sum(qty) AS q FROM pr_sales "

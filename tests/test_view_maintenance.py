@@ -127,6 +127,21 @@ def test_self_join_view_falls_back_to_full(eng):
     assert _rows(eng.sql("SELECT k, v FROM vm_sjv")) == {(1, 9)}
 
 
+def test_quantified_subquery_view_falls_back_to_full(eng):
+    # `> ALL (subquery)` depends on the whole of `u`: a delta through
+    # it would count the rows of `t` again on every insert into `u`
+    eng.sql("CREATE TABLE vm_t (k Int32, v Int64)")
+    eng.sql("CREATE TABLE vm_u (x Int64)")
+    eng.sql("INSERT INTO vm_t (k, v) VALUES (1, 5), (2, 10)")
+    eng.sql("INSERT INTO vm_u (x) VALUES (1)")
+    query = "SELECT k, v FROM vm_t WHERE v > ALL (SELECT x FROM vm_u)"
+    eng.sql(f"CREATE VIEW vm_qv UPDATE BY Summing ORDER BY (k) AS {query}")
+    assert eng.catalog._load_meta("vm_qv")["maintenance"] == "full"
+    eng.sql("INSERT INTO vm_u (x) VALUES (7)")
+    assert _rows(eng.sql("SELECT k, v FROM vm_qv")) == _rows(eng.sql(query))
+    assert _rows(eng.sql(query)) == {(2, 10)}
+
+
 def test_aggregating_view_falls_back_to_full(eng):
     eng.sql("CREATE TABLE vm_a (k Int32, v Int64)")
     eng.sql(
