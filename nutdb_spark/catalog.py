@@ -73,7 +73,11 @@ _SERIAL_TYPES = {
 }
 
 
-def to_spark_type(dt: A.DataType) -> S.DataType:
+def to_spark_type(dt: A.DataType | S.DataType) -> S.DataType:
+    if isinstance(dt, S.DataType):
+        # the projection rewrite casts to a stored column's Spark type,
+        # which no dialect type may name (e.g. decimal(28,2))
+        return dt
     name = dt.name
     if name in _SIMPLE_TYPES:
         return _SIMPLE_TYPES[name]
@@ -434,6 +438,92 @@ def _branch_delta_ok(b) -> bool:
         if isinstance(node, A.FnCall) and node.name.lower() in _AGG_NAMES:
             return False
     return all(c == 1 for c in refs.values())
+
+
+# How the stored partials of each re-aggregatable aggregate merge:
+# counts add, extremes keep the extreme. Each is associative and
+# commutative, so merge(agg(old), agg(Δ)) = agg(old ∪ Δ) exactly.
+REAGGREGATE = {"sum": "sum", "count": "sum", "min": "min", "max": "max"}
+
+
+def agg_form(e) -> tuple | None:
+    """The canonical form of a re-aggregatable call, (name, argument
+    reprs) with count() ≡ count(*); None for any other expression,
+    DISTINCT and parametric calls included."""
+    if not isinstance(e, A.FnCall) or e.params is not None or e.distinct:
+        return None
+    name = e.name.lower()
+    if name not in REAGGREGATE:
+        return None
+    args = e.args
+    if name == "count" and len(args) == 1 and isinstance(args[0], A.Wildcard):
+        args = []
+    return name, tuple(map(repr, args))
+
+
+def view_aggregates(meta: dict, q) -> dict | None:
+    """What each stored column of view ``meta`` with defining query
+    ``q`` holds, as ``{column: (held, merge op)}``. A merge-key column
+    holds the base column named ``held`` (op None); any other column
+    holds the base aggregate whose :func:`agg_form` is ``held``, and
+    merges under op. None unless the view's rows are, per merge key,
+    mergeable aggregates of one table's rows:
+
+    - Summing: a plain projection of one table; each non-key column
+      holds the sum of its base column.
+    - Aggregating: ``SELECT keys…, agg(…) AS a… FROM t [WHERE …] GROUP
+      BY …`` whose key columns are exactly the merge keys and whose
+      other columns are aliased sum/count/min/max calls.
+
+    Pure AST code: it lowers nothing and starts no Spark job."""
+    if meta.get("strategy") not in ("summing", "aggregating"):
+        return None
+    if (
+        not isinstance(q, A.SelectCore)
+        or q.ctes or q.expr_aliases or q.distinct
+        or q.distinct_on is not None or q.joins or q.from_ is None
+        or q.from_.sample is not None
+        or not isinstance(q.from_.source, A.TableRef)
+        or q.group_all or q.group_modifier or q.group_sets is not None
+        or q.having is not None or q.qualify is not None
+        or q.limit is not None or q.limit_by is not None
+        or any(o.fill for o in q.order_by)  # WITH FILL adds rows
+    ):
+        return None
+    summing = meta["strategy"] == "summing"
+    if summing and (
+        q.where is not None or q.prewhere is not None or q.group_by
+    ):
+        return None
+    groups = set()
+    for g in q.group_by:
+        if not isinstance(g, A.Ident) or g.qualifier:
+            return None
+        groups.add(g.name)
+    keys = set(meta["order_by"] or [])
+    out: dict[str, tuple] = {}
+    for e, alias in q.columns:
+        if isinstance(e, A.Ident) and not e.qualifier and (
+            summing or e.name in groups
+        ):
+            col = alias or e.name
+            if summing and col not in keys:
+                held = (("sum", (repr(e),)), "sum")
+            else:
+                held = (e.name, None)
+        elif not summing and alias and (form := agg_form(e)) is not None:
+            col, held = alias, (form, REAGGREGATE[form[0]])
+        else:
+            return None
+        if col in out:
+            return None
+        out[col] = held
+    if summing:
+        return out
+    stored_keys = {c for c, (_, op) in out.items() if op is None}
+    if not groups or stored_keys != keys or len(stored_keys) == len(out):
+        return None
+    return out
 
 
 class Catalog:
@@ -1103,70 +1193,22 @@ class Catalog:
 
     def _mark_aggregating_incremental(self, meta: dict, q, low) -> None:
         """[EXT] UPDATE BY Aggregating — ClickHouse AggregatingMergeTree
-        for the re-aggregatable functions. Eligible shape: ONE
-        SelectCore `SELECT keys..., agg(x) AS a, ... FROM t [WHERE
-        row-local] GROUP BY keys` where every aggregate is sum / count
-        / min / max (merge ops: counts ADD, min/max keep-extreme — all
-        associative+commutative, so agg(old ∪ Δ) = merge(agg(old),
-        agg(Δ)) exactly; avg is NOT re-aggregatable and falls back to
-        full refresh, spell it sum/count). State is the same bucketed
-        parquet as Summing, merged per insert in O(touched buckets)."""
+        for the re-aggregatable functions. Eligible: a view that
+        :func:`view_aggregates` classifies, with no subquery (avg and
+        DISTINCT are NOT re-aggregatable and fall back to full refresh;
+        spell avg as sum/count). State is the same bucketed parquet as
+        Summing, merged per insert in O(touched buckets) under each
+        column's merge op."""
         meta["maintenance"] = "full"
-        if not isinstance(q, A.SelectCore):
-            return
-        b = q
-        if (
-            b.distinct
-            or b.distinct_on is not None
-            or not b.group_by
-            or b.having is not None
-            or b.limit is not None
-            or b.ctes
-            or b.joins
-            or b.from_ is None
-            or getattr(b, "qualify", None) is not None
-            or getattr(b, "group_modifier", None) is not None
-            or getattr(b, "group_sets", None) is not None
-            or getattr(b.from_, "sample", None) is not None
-            or not isinstance(b.from_.source, A.TableRef)
-        ):
-            return
+        cols = view_aggregates(meta, q)
         # a subquery's value depends on whole-table state, so a
         # per-insert delta through it would be silently wrong
-        if b.where is not None and any(
-            isinstance(n, A.SUBQUERIES) for n in A.walk(b.where)
-        ):
-            return
-        group_names = set()
-        for g in b.group_by:
-            if not (isinstance(g, A.Ident) and g.qualifier is None):
-                return
-            group_names.add(g.name)
-        _AGG_OPS = {"sum": "sum", "count": "sum", "min": "min", "max": "max"}
-        ops: dict[str, str] = {}
-        out_keys: list[str] = []
-        for e, alias in b.columns:
-            if isinstance(e, A.Ident) and e.qualifier is None:
-                if e.name not in group_names:
-                    return
-                out_keys.append(alias or e.name)
-                continue
-            if (
-                isinstance(e, A.FnCall)
-                and e.name.lower() in _AGG_OPS
-                and e.params is None
-                and alias
-            ):
-                ops[alias] = _AGG_OPS[e.name.lower()]
-                continue
-            return
-        keys = meta["order_by"]
-        if set(keys) != set(out_keys) or not ops:
+        if cols is None or any(isinstance(n, A.SUBQUERIES) for n in A.walk(q)):
             return
         df = low.lower_query(q)
         meta["maintenance"] = "incremental"
         meta["out_columns"] = df.columns
-        meta["merge_ops"] = ops
+        meta["merge_ops"] = {c: op for c, (_, op) in cols.items() if op}
         meta["merged_schema"] = df.schema.json()
 
     def show_create(self, meta: dict) -> str:

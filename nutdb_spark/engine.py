@@ -14,12 +14,16 @@ DataFrame for DESCRIBE/EXPLAIN, and None for DDL/effects.
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import replace as _dc_replace
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as S
 
-from nutdb_spark.catalog import Catalog, CatalogError
+from nutdb_spark.catalog import (
+    Catalog, CatalogError, agg_form, view_aggregates,
+)
 from nutdb_spark.frontend import ast_nodes as A
 from nutdb_spark.frontend.lower import Lowerer, LoweringError
 from nutdb_spark.frontend.parser import parse
@@ -99,50 +103,15 @@ class NutEngine:
         out = [
             m
             for m in self.catalog.objects()
+            # only an incremental view stores exactly its merged
+            # columns, in the types merged_schema records (a full
+            # refresh keeps first() of a non-numeric Summing column)
             if m["type"] == "view"
             and m.get("strategy") in ("summing", "aggregating")
+            and m.get("maintenance") == "incremental"
         ]
         self._rw_views_cache = (stamp, out)
         return out
-
-    @staticmethod
-    def _canon_agg(expr):
-        """Canonical form for aggregate-call matching: count() ≡
-        count(*); params/distinct forms never match."""
-        if not isinstance(expr, A.FnCall) or expr.params or expr.distinct:
-            return None
-        name = expr.name.lower()
-        args = expr.args
-        if name == "count" and (
-            not args or (len(args) == 1 and isinstance(args[0], A.Wildcard))
-        ):
-            args = []
-        return (name, tuple(repr(a) for a in args))
-
-    @staticmethod
-    def _view_column_map(vq) -> tuple[str, dict] | None:
-        """(base table, {base col → view col}) when the view's defining
-        query is a plain projection of one table — the only shape the
-        rewrite can soundly substitute."""
-        if not isinstance(vq, A.SelectCore):
-            return None
-        if (
-            vq.ctes or vq.expr_aliases or vq.distinct or vq.joins
-            or vq.where or vq.prewhere or vq.group_by or vq.having
-            or vq.qualify or vq.limit or vq.limit_by or vq.order_by
-        ):
-            return None
-        if vq.from_ is None or not isinstance(vq.from_.source, A.TableRef):
-            return None
-        mapping: dict[str, str] = {}
-        for expr, alias in vq.columns:
-            if not isinstance(expr, A.Ident) or expr.qualifier:
-                return None
-            base_col = expr.name
-            if base_col in mapping:
-                return None
-            mapping[base_col] = alias or base_col
-        return vq.from_.source.name, mapping
 
     @staticmethod
     def _where_idents(node, acc: set) -> bool:
@@ -214,9 +183,7 @@ class NutEngine:
                 if expr.name not in keys:
                     return None
                 items.append(("key", expr.name, alias))
-            elif isinstance(expr, A.FnCall):
-                if self._canon_agg(expr) is None:
-                    return None
+            elif agg_form(expr) is not None:
                 items.append(("agg", expr, alias))
             else:
                 return None
@@ -234,85 +201,47 @@ class NutEngine:
             if not oc <= (set(keys) | out_aliases):
                 return None
         for meta in self._rewrite_views():
-            out = self._match_view(meta, base, keys, items, wcols, q)
+            out = self._match_view(meta, base, keys, items, q)
             if out is not None:
                 return out
         return None
 
-    def _match_view(self, meta, base, keys, items, wcols, q):
+    def _match_view(self, meta, base, keys, items, q):
         try:
             vq = self.catalog.view_query(meta)
         except CatalogError:
             return None  # unreadable views answer nothing
-        # (agg canonical form → (view column, re-aggregation fn))
-        aggmap: dict = {}
-        if meta["strategy"] == "summing":
-            parsed = self._view_column_map(vq)
-            if parsed is None:
-                return None
-            vbase, colmap = parsed
-            vkeys = set(meta["order_by"] or [])
-            for bc, vc in colmap.items():
-                if vc not in vkeys:
-                    # value columns merge by SUM — only sum(bc) maps
-                    aggmap[("sum", (repr(A.Ident(bc)),))] = (vc, "sum")
-        else:  # aggregating: the defining query carries its own aggs
-            if not isinstance(vq, A.SelectCore) or vq.where is not None:
-                return None
-            if vq.from_ is None or not isinstance(vq.from_.source, A.TableRef):
-                return None
-            vbase = vq.from_.source.name
-            _REAGG = {"sum": "sum", "count": "sum", "min": "min",
-                      "max": "max"}
-            colmap = {}
-            for expr, alias in vq.columns:
-                if isinstance(expr, A.Ident) and not expr.qualifier:
-                    colmap[expr.name] = alias or expr.name
-                    continue
-                canon = self._canon_agg(expr)
-                if (
-                    canon is None
-                    or canon[0] not in _REAGG
-                    or not alias
-                ):
-                    return None
-                aggmap[canon] = (alias, _REAGG[canon[0]])
-            vkeys = set(meta["order_by"] or [])
-            # the view's OWN GROUP BY must be exactly its merge keys:
-            # when it groups finer (GROUP BY region, item with ORDER BY
-            # region), maintenance falls back to 'full' and
-            # the full refresh merges the stored rows Summing-style per
-            # merge key — SUMMING a min/max/count column across the
-            # extra grain, so the stored aggregates are no longer the
-            # functions the query names. Rewriting onto such a view
-            # returns silently wrong results; skip it.
-            vgroup: set[str] = set()
-            for gexpr in vq.group_by:
-                if not isinstance(gexpr, A.Ident) or gexpr.qualifier:
-                    return None
-                vgroup.add(colmap.get(gexpr.name, gexpr.name))
-            if vgroup != vkeys:
-                return None
-        if vbase != base:
+        cols = view_aggregates(meta, vq)
+        # a filtered view holds aggregates of the rows it kept only
+        if (
+            cols is None or vq.where is not None or vq.prewhere is not None
+            or vq.from_.source.name != base
+        ):
             return None
-        if not all(k in colmap and colmap[k] in vkeys for k in keys):
+        colmap = {held: c for c, (held, op) in cols.items() if op is None}
+        aggmap = {held: (c, op) for c, (held, op) in cols.items() if op}
+        if not all(k in colmap for k in keys):
             return None
+        stored = S.StructType.fromJson(json.loads(meta["merged_schema"]))
         new_cols = []
         for kind, c, alias in items:
             if kind == "key":
                 new_cols.append((A.Ident(colmap[c]), alias or c))
-            else:
-                hit = aggmap.get(self._canon_agg(c))
-                if hit is None:
-                    return None
-                vc, reagg = hit
-                # default name matches the lowerer's for the ORIGINAL
-                # call (Lowerer._expr_name: bare fn name), so an
-                # unaliased query keeps its schema under the rewrite
-                new_cols.append(
-                    (A.FnCall(reagg, [A.Ident(vc)]), alias or c.name)
-                )
-        ren = {k: colmap[k] for k in set(keys) | wcols}
+                continue
+            hit = aggmap.get(agg_form(c))
+            if hit is None:
+                return None
+            vc, op = hit
+            # cast back to the stored column's type, the type of the
+            # original call (a sum of sums widens a decimal again);
+            # the default name is the lowerer's for the ORIGINAL call
+            # (Lowerer._expr_name: bare fn name), so an unaliased query
+            # keeps its schema under the rewrite
+            new_cols.append((
+                A.Cast(A.FnCall(op, [A.Ident(vc)]), stored[vc].dataType),
+                alias or c.name,
+            ))
+        ren = {k: colmap[k] for k in keys}
 
         def renamed(n):
             if isinstance(n, A.Ident) and n.name in ren:

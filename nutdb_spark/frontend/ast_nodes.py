@@ -162,7 +162,7 @@ class Cast:
     (overflow errors rather than ClickHouse's wrapping)."""
 
     expr: object
-    dtype: object  # DataType
+    dtype: object  # DataType, or a Spark type (projection rewrite)
 
 
 @dataclass

@@ -68,12 +68,14 @@ def pagerank(
     base = scale // n
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     # The unrolled plan reuses the edge list and node set once per
-    # iteration — persist both (lazy; materialized on first execution)
-    # so 100 TB of edges is scanned/shuffled once, not `iters` times.
-    # The GraphX discipline; at these sizes the cache is node/edge-
-    # bounded, never iteration-bounded.
-    e = edges.join(outdeg, "src").persist()
-    nodes = nodes.select("id").persist()
+    # iteration — checkpoint both (lazy; materialized on first
+    # execution) so 100 TB of edges is scanned/shuffled once, not
+    # `iters` times. The GraphX discipline; at these sizes the copy is
+    # node/edge-bounded, never iteration-bounded. Not persist(): a
+    # cached plan outlives this call, and a later read of a re-created
+    # table at the same path matches it and lists the old files.
+    e = edges.join(outdeg, "src").localCheckpoint(eager=False)
+    nodes = nodes.select("id").localCheckpoint(eager=False)
     ranks = nodes.select("id", F.lit(base).cast("long").alias("rank"))
     # Per iteration: ONE equi-join (edge × rank) and ONE aggregation.
     # The zero-contribution seed row unioned in per node replaces the

@@ -41,31 +41,8 @@ for _m in _MODULES:
         if ex.name != _m:
             raise
 
-# The driver grades the first 50 registry entries.
-# Round-13 window, exactly as the r12 verdict ordered: (1) the 18
-# entries that have NEVER had a driver row (the r12 session-3/wave
-# additions), (2) the 5 entries new THIS round (hashed-linear langid
-# + its CCNet composition + table fn, perceptual-hash image dedup,
-# the unsliced DTW table fn), (3) the 5 entries whose values or
-# machinery changed this round — q_pipeline_curate's Gopher gate now
-# uses the published thresholds (>90% bullet-line rejection,
-# per-symbol 0.1 ratios), and the stream-stream join matrix was
-# rewritten onto one shared source+runner (values identical by
-# oracle, but a changed entry needs a fresh grade; q_stream_join's
-# last grade was also the stalest, r6) — then (4) the r6 re-grade
-# pool in name order (q_stream_join excluded: already in (3)).
-# 18 + 24 + 5 + 3 = 50 (the late sessions added nineteen more new
-# entries — q_sample_temperature_langid, q_dedup_audio,
-# q_dedup_image_incremental, the sketch quartet (incl. incremental
-# ingest, set-ops) + its table fn, q_mix_doremi + its table fn,
-# q_sim_topk_sq8 + hard-negative mining, q_layout_zorder,
-# q_text_bpe_decode, T5 span corruption — which take
-# the last r6 slots: never-graded outranks re-grades, the standing
-# priority).
-# The ROUND-14 window should resume the r6 pool at q_dedup_spans
-# (q_dedup_spans, q_distinct_on, q_except, q_exists, q_expr_arith,
-# q_expr_bitwise, q_expr_case, q_expr_compare, q_expr_logic,
-# q_fn_dates, q_fn_datetime, q_fn_minmax, ...), then the r7 pool.
+# Entries named in _PRIORITY lead the registry, in its order; the rest
+# follow in registration order.
 _PRIORITY = [
     # --- (1) never driver-graded (r12 backlog, named in the verdict) ---
     "q_text_gopher", "q_dedup_substring", "q_dedup_substring_incremental",

@@ -114,6 +114,38 @@ def test_pagerank_table_fn_errors_and_values(spark):
     assert all(r["rank"] == SCALE // 10 for r in got)
 
 
+def test_pagerank_table_fn_after_edges_recreated(spark, tmp_path):
+    """pageRank over a table dropped and re-created with other edges
+    ranks the new edges: the first call leaves no cached plan that a
+    later read of the same path matches (it would list the dropped
+    table's files, or answer from the old edges)."""
+    from nutdb_spark.engine import NutEngine
+
+    eng = NutEngine(
+        spark, data_dir="/root/testdata/sf0.001", catalog_dir=str(tmp_path)
+    )
+    graphs = [
+        [(i, (i + 1) % 6) for i in range(6)],
+        [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2), (4, 0), (5, 4), (5, 3)],
+        [(0, 1), (1, 0), (2, 0), (3, 0), (4, 0), (5, 1)],
+    ]
+    sql = "select id, rank from pageRank('pr_re', 'src', 'dst', 4)"
+    lazy = None
+    for i, edges in enumerate(graphs):
+        eng.sql("DROP TABLE IF EXISTS pr_re")
+        values = ", ".join(f"({s}, {d})" for s, d in edges)
+        eng.sql(
+            "CREATE TABLE pr_re AS SELECT CAST(a AS Int64) AS src, "
+            f"CAST(b AS Int64) AS dst FROM (VALUES {values}) t(a, b)"
+        )
+        if i == 0:
+            lazy = eng.sql(sql)  # planned, never run
+            continue
+        got = {r["id"]: r["rank"] for r in eng.sql(sql).collect()}
+        assert got == _py_pagerank(edges, sorted(got), 4), i
+    assert lazy is not None
+
+
 def _py_triangles(edges, nodes):
     und = {tuple(sorted(e)) for e in edges if e[0] != e[1]}
     adj: dict[int, set] = {v: set() for v in nodes}

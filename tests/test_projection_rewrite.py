@@ -152,6 +152,43 @@ def test_unaliased_aggregate_keeps_schema(eng):
     assert df.columns == base.columns
 
 
+@pytest.mark.parametrize(
+    "view",
+    [
+        "CREATE VIEW pr_dsum UPDATE BY Summing ORDER BY (k) AS "
+        "SELECT k, x, u FROM pr_dec",
+        "CREATE VIEW pr_dagg UPDATE BY Aggregating ORDER BY (k) AS "
+        "SELECT k, sum(x) AS sx, sum(u) AS su, count() AS n, "
+        "min(x) AS lo, max(u) AS hi FROM pr_dec GROUP BY k",
+    ],
+    ids=["summing", "aggregating"],
+)
+def test_rewrite_keeps_decimal_sum_types(eng, view):
+    """A sum over Decimal64(2) or UInt64 (both decimals) answered from
+    a view has the type and values of the same query over the base: the
+    view's column already holds the sum, and summing it again must not
+    widen the decimal a second time."""
+    eng.sql("CREATE TABLE pr_dec (k Int32, x Decimal64(2), u UInt64)")
+    eng.sql(view)
+    eng.sql("INSERT INTO pr_dec VALUES (1, 1.25, 10), (2, 2.5, 7)")
+    eng.sql("INSERT INTO pr_dec VALUES (1, 0.75, 5)")
+    name = view.split()[2]
+    queries = ["SELECT k, sum(x), sum(u) FROM pr_dec GROUP BY k"]
+    if name == "pr_dagg":
+        queries.append(
+            "SELECT k, sum(u) AS su, count(*), min(x), max(u) "
+            "FROM pr_dec GROUP BY k"
+        )
+    for sql in queries:
+        df = eng.sql(sql)
+        assert name in _plan(df), sql
+        base = eng.sql(sql + " SETTINGS optimize_use_projections = 0")
+        assert df.dtypes == base.dtypes, sql
+        assert sorted(map(tuple, df.collect())) == sorted(
+            map(tuple, base.collect())
+        ), sql
+
+
 def test_detach_attach_and_backup_errors(eng, tmp_path):
     """Error fences for the operational DDL: DETACH on views/unknowns,
     double ATTACH, RESTORE onto an existing table, RESTORE from a
@@ -229,7 +266,7 @@ def test_rewrite_randomized_equivalence(eng):
 
 def test_no_rewrite_onto_finer_grained_aggregating_view(eng):
     """An Aggregating view whose GROUP BY is FINER than its ORDER BY
-    merge keys falls back to full maintenance, and refresh_view then
+    merge keys falls back to full maintenance, and _view_job then
     merges the stored rows Summing-style per merge key — summing the
     min column across the extra grain. The rewrite must refuse such a
     view: min(qty) through it would be a min over summed minima."""

@@ -301,6 +301,29 @@ def test_aggregating_view_decimal_sums_read_after_insert(spark, tmp_path):
     }
 
 
+def test_aggregating_view_of_distinct_aggregates_is_full(spark, tmp_path):
+    """count(DISTINCT x) and sum(DISTINCT x) are not re-aggregatable:
+    merging the partials of two inserts of the same rows counts and
+    sums each value twice. Such a view refreshes whole and equals its
+    query."""
+    from nutdb_spark.engine import NutEngine
+
+    eng = NutEngine(
+        spark, data_dir="/root/testdata/sf0.001", catalog_dir=str(tmp_path)
+    )
+    eng.sql("create table ag5 (k Int32, x Int64) ORDER BY (k)")
+    query = (
+        "select k, count(DISTINCT x) as n, sum(DISTINCT x) as s "
+        "from ag5 group by k"
+    )
+    eng.sql(f"create view agv5 update by Aggregating order by (k) as {query}")
+    assert eng.catalog._load_meta("agv5")["maintenance"] == "full"
+    for _ in range(2):
+        eng.sql("insert into ag5 (k, x) values (1, 5), (1, 6)")
+    assert _rows(eng.sql("select k, n, s from agv5")) == {(1, 2, 11)}
+    assert _rows(eng.sql(query)) == {(1, 2, 11)}
+
+
 # --- [EXT] plain (non-materialized) views ---------------------------------
 
 
