@@ -136,6 +136,16 @@ def _move(src: str, dst: str) -> None:
     os.replace(src, dst)
 
 
+def _link(src: str, dst: str) -> None:
+    """Stage live entry ``src`` (a file or a tree) at ``dst`` as hard
+    links, which a staging directory in the same parent can take: no
+    live file is written in place, so no data is copied."""
+    if os.path.isdir(src):
+        shutil.copytree(src, dst, copy_function=os.link)
+    else:
+        os.link(src, dst)
+
+
 def _remove(path: str) -> None:
     if os.path.isdir(path):
         shutil.rmtree(path)
@@ -199,9 +209,9 @@ def commit(parent: str, names: list[str], write=None) -> None:
     the commit's lock (:func:`_claim`) keeps it off a commit whose
     owner is alive.
 
-    A statement that writes a table commits the table's new entries
-    (its data directory, or an INSERT's new part files) and what it
-    changes in every view derived from it here, as one unit.
+    Every catalog statement is one commit: a table write covers the
+    views derived from the table, and RENAME/EXCHANGE stage each table
+    under its new name (:func:`_link`) with its views' sidecars.
 
     Out of scope: a streaming sink's state outside a catalog is never
     swept; concurrent writers of one entry get nothing beyond unique
@@ -287,20 +297,23 @@ def recover(parent: str) -> None:
             os.close(fd)
 
 
-def _move_files(src: str, dst: str) -> list[str]:
+def _parquet_files(root: str) -> list[str]:
+    """The parquet files under ``root``, as paths relative to it."""
+    return [
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, files in os.walk(root)
+        for f in files
+        if f.endswith(".parquet")
+    ]
+
+
+def _move_files(src: str, dst: str) -> None:
     """Move the parquet files under ``src`` into ``dst``, keeping
-    partition subdirectories; returns their new paths. Part-file names
-    carry write-unique ids, so moves into a live table never collide."""
-    moved = []
-    for root, _dirs, files in os.walk(src):
-        rel = os.path.relpath(root, src)
-        dst_dir = dst if rel == "." else os.path.join(dst, rel)
-        for f in files:
-            if f.endswith(".parquet"):
-                os.makedirs(dst_dir, exist_ok=True)
-                os.rename(os.path.join(root, f), os.path.join(dst_dir, f))
-                moved.append(os.path.join(dst_dir, f))
-    return moved
+    partition subdirectories. Part-file names carry write-unique ids,
+    so the moves never collide."""
+    for f in _parquet_files(src):
+        os.makedirs(os.path.dirname(os.path.join(dst, f)), exist_ok=True)
+        os.rename(os.path.join(src, f), os.path.join(dst, f))
 
 
 def _lowerer_over(low, table: str, frame: DataFrame):
@@ -361,10 +374,6 @@ def _run_beside(jobs) -> list:
 
 
 # --- incremental-view eligibility (S7) ------------------------------------
-
-# buckets of an incrementally maintained view's state (streaming/summing.py)
-_VIEW_BUCKETS = 16
-
 
 def _unionall_branches(q) -> list | None:
     """Flatten a view query into UNION ALL branches; None if any other
@@ -554,17 +563,10 @@ class Catalog:
         with open(p) as f:
             return json.load(f)
 
-    def _save_meta(self, name: str, meta: dict) -> None:
-        """Write a sibling, then move it over the sidecar: a failed
-        write leaves the previous sidecar in place."""
-        with _claim(self.root) as cid:
-            tmp = _entry(self.root, cid, "new")
-            try:
-                _dump(tmp, meta)
-                os.replace(tmp, self._meta_path(name))
-            except BaseException:
-                _remove(tmp)
-                raise
+    def _taken(self, name: str) -> bool:
+        """Whether an object, attached or detached, has ``name``."""
+        path = self._data_path(name)
+        return os.path.lexists(path) or os.path.lexists(path + ".json")
 
     def objects(self):
         """Every catalog object's sidecar, in name order."""
@@ -789,7 +791,7 @@ class Catalog:
         views = self._materialized_views(table)
 
         def write(staged: str) -> list[str]:
-            path = os.path.join(staged, ".rows")
+            path = os.path.join(staged, table)
             self._write_rows(src, meta, low, path)
             delta = self._read_data(path, meta)
             jobs, whole = [], None
@@ -803,10 +805,9 @@ class Catalog:
                     job = self._view_job(m, whole)
                 jobs.append(functools.partial(job, staged))
             touched = _run_beside(jobs)
-            files = _move_files(path, os.path.join(staged, table))
             _dump(os.path.join(staged, table + ".json"), meta)
             return [
-                *(os.path.relpath(f, staged) for f in files),
+                *(os.path.join(table, f) for f in _parquet_files(path)),
                 table + ".json",
                 *(n for names in touched for n in names),
             ]
@@ -826,24 +827,17 @@ class Catalog:
                 raise CatalogError(f"unknown column {c!r}")
 
         if kind == "values":
-            # One inline(array(struct(row)…)) over range(1): a single
-            # one-task relation and ONE codegen segment however many
-            # rows the statement lists. (The previous shape — one
-            # range(1).select per row chained through unionByName —
-            # made every downstream job (validation aggregate, write)
-            # plan and run N branches.) Cells are cast to the DECLARED
-            # column type here so every struct is same-typed (the
-            # array() requirement); the staged-output projection in
-            # _write_rows applies the identical cast, so this is the
-            # same coercion one step earlier, not a new one.
+            # One inline(array(struct(row)…)) over range(1): one
+            # one-task relation and one codegen segment however many
+            # rows are listed. Cells are cast to the declared column
+            # type, so every struct is same-typed (array() requires it);
+            # _write_rows applies the same cast.
             types_by_name = {
                 c["name"]: _parse_type(c["spark_type"]) for c in col_meta
             }
             row_structs = []
             for i, row in enumerate(payload):
                 if len(row) != len(target_cols):
-                    # reference: ragged INSERT rows are a Conflicts error
-                    # (/root/reference/src/parser/mod.rs:657-664)
                     raise CatalogError(
                         f"INSERT row {i + 1} has {len(row)} values but "
                         f"{len(target_cols)} target columns"
@@ -881,8 +875,7 @@ class Catalog:
         n_rows = 0
         if need_serial:
             # pin partition layout: the counts job and the write job must
-            # see identical partition ids / local indexes (also avoids
-            # recomputing the source between validation and write)
+            # see identical partition ids / local indexes
             src = src.persist()
             # Dense, distributed serial assignment: one small aggregate
             # computes per-partition row counts; each row's id is
@@ -1016,9 +1009,9 @@ class Catalog:
             )
         return violations
 
-    def _dependent_views(self, table: str):
-        """Each view whose defining query reads ``table``, with that
-        query parsed."""
+    def _dependent_views(self, *tables: str):
+        """Each view whose defining query reads one of ``tables``, with
+        that query parsed."""
         for meta in self.objects():
             if meta["type"] != "view":
                 continue
@@ -1026,7 +1019,7 @@ class Catalog:
                 q = self.view_query(meta)
             except CatalogError:
                 continue  # unreadable: reads of it raise instead
-            if any(r.name == table for r in _table_refs(q)):
+            if any(r.name in tables for r in _table_refs(q)):
                 yield meta, q
 
     def _materialized_views(self, table: str) -> list[dict]:
@@ -1036,16 +1029,43 @@ class Catalog:
             if m.get("strategy") != "plain"
         ]
 
-    def _rename_in_views(self, old: str, new: str) -> None:
-        """Follow a table rename through every dependent view's stored
-        query (ALTER … RENAME would otherwise orphan the views:
-        refreshes and delta merges resolve by name)."""
-        for meta, q in self._dependent_views(old):
-            for ref in _table_refs(q):
-                if ref.name == old:
-                    ref.name = new
+    def rename(self, mapping) -> None:
+        """Rename tables by ``mapping`` (``{old: new}`` or its pairs) at
+        once, in one commit: ALTER … RENAME TO, RENAME TABLE, EXCHANGE
+        TABLES (``{a: b, b: a}``). A target must be free unless renamed
+        away too. Each data directory is staged under its new name with
+        its new sidecar, and each dependent view's query with every
+        TableRef mapped at once, so a view follows its table's data."""
+        pairs = dict(mapping)
+        metas = {old: self._load_meta(old) for old in pairs}
+        for old, new in pairs.items():
+            if (metas[old] or {}).get("type") != "table":
+                raise CatalogError(f"unknown table {old!r}")
+            if new not in pairs and self._taken(new):
+                raise CatalogError(f"{new!r} already exists")
+        if len(set(pairs.values())) < len(mapping):
+            raise CatalogError("RENAME names one table twice")
+        views = list(self._dependent_views(*pairs))
+        for meta, q in views:
+            for n in A.walk(q):
+                ref = getattr(n, "source", None)  # a FROM or JOIN source
+                if isinstance(ref, A.TableRef) and ref.name in pairs:
+                    # a qualified column keeps naming the renamed table
+                    n.alias = n.alias or ref.name
+                    ref.name = pairs[ref.name]
             meta["query"] = printer.query(q)
-            self._save_meta(meta["name"], meta)
+
+        def write(staged: str) -> None:
+            for old, new in pairs.items():
+                _link(self._data_path(old), os.path.join(staged, new))
+                meta = {**metas[old], "name": new}
+                _dump(os.path.join(staged, new + ".json"), meta)
+            for meta, _q in views:
+                _dump(os.path.join(staged, meta["name"] + ".json"), meta)
+
+        tables = sorted({*pairs, *pairs.values()})
+        objs = tables + [meta["name"] for meta, _q in views]
+        commit(self.root, tables + [n + ".json" for n in objs], write)
 
     def _replace(
         self, table: str, meta: dict, low, stage, new: DataFrame | None,
@@ -1089,41 +1109,20 @@ class Catalog:
 
     # --- views (S7): CREATE VIEW … UPDATE BY <strategy> -------------------
 
-    _VIEW_STRATEGIES = ("summing", "replacing", "aggregating")
-
     def create_view(self, v: A.ViewDefinition, low) -> None:
         existing = self._load_meta(v.name)
         if existing is not None:
             if v.if_not_exists:
                 return
-            if getattr(v, "or_replace", False):
-                # [EXT] CREATE OR REPLACE VIEW — drop-and-recreate
-                self.drop(A.DropStmt(existing["type"], v.name, True))
-            else:
+            if not getattr(v, "or_replace", False):
                 raise CatalogError(f"view {v.name!r} already exists")
+            # [EXT] CREATE OR REPLACE VIEW: the new view is committed
+            # over the old object, which stays if the new one fails
         strategy = v.strategy.lower()
-        if strategy == "plain":
-            # [EXT] non-materialized view: store the query, nothing
-            # else — reads lower it fresh (engine.resolve_table), so
-            # there is no state to maintain, refresh, or repair.
-            self._save_meta(
-                v.name,
-                {
-                    "type": "view",
-                    "name": v.name,
-                    "strategy": "plain",
-                    "order_by": v.order_by,
-                    "primary_key": v.primary_key,
-                    "query": printer.query(v.query),
-                },
-            )
-            return
-        if strategy not in self._VIEW_STRATEGIES:
+        if strategy not in ("plain", "summing", "replacing", "aggregating"):
             raise CatalogError(f"unsupported view strategy {v.strategy!r}")
-        if not v.order_by:
-            raise CatalogError(
-                f"{v.strategy} view requires ORDER BY merge keys"
-            )
+        if strategy != "plain" and not v.order_by:
+            raise CatalogError(f"{v.strategy} view requires ORDER BY merge keys")
         if strategy == "replacing" and not v.primary_key:
             raise CatalogError(
                 "Replacing view requires PRIMARY KEY (version columns): "
@@ -1138,11 +1137,16 @@ class Catalog:
             "primary_key": v.primary_key,
             "query": printer.query(v.query),
         }
-        self._mark_incremental_if_eligible(meta, low)
-        job = self._view_job(meta, low)
+        # [EXT] a plain view stores only its query: reads lower it fresh
+        # (engine.resolve_table), so it has no state to maintain
+        job = None
+        if strategy != "plain":
+            self._mark_incremental_if_eligible(meta, low)
+            job = self._view_job(meta, low)
 
         def write(staged: str) -> None:
-            job(staged)
+            if job is not None:
+                job(staged)
             _dump(os.path.join(staged, v.name + ".json"), meta)
 
         commit(self.root, [v.name, v.name + ".json"], write)
@@ -1300,16 +1304,16 @@ class Catalog:
         batch = batch.select(*meta["out_columns"])
         if meta["strategy"] == "replacing":
             return replacing_merge_batch(
-                batch, keys, meta["primary_key"], state, _VIEW_BUCKETS, staged
+                batch, keys, meta["primary_key"], state, staged=staged
             )
         elif meta["strategy"] == "aggregating":
             from nutdb_spark.streaming.summing import aggregating_merge_batch
 
             return aggregating_merge_batch(
-                batch, keys, meta["merge_ops"], state, _VIEW_BUCKETS, staged
+                batch, keys, meta["merge_ops"], state, staged=staged
             )
         sums = [c for c in meta["out_columns"] if c not in keys]
-        return summing_merge_batch(batch, keys, sums, state, _VIEW_BUCKETS, staged)
+        return summing_merge_batch(batch, keys, sums, state, staged=staged)
 
     def _view_job(self, meta: dict, low):
         """Lower view ``meta``'s defining query with ``low`` now and
@@ -1320,7 +1324,9 @@ class Catalog:
         strategy's merge over the full query. Any other view is a full
         refresh: Summing sums numeric non-key columns per ORDER BY key
         (ClickHouse SummingMergeTree semantics; non-numeric non-key
-        columns keep an arbitrary representative via `first`);
+        columns keep an arbitrary representative via `first`), and so
+        does Aggregating, casting back to the query's own types as its
+        incremental state does (a sum of sums widens a decimal);
         Replacing keeps, per ORDER BY key, the row with the greatest
         PRIMARY KEY version (ReplacingMergeTree(ver) semantics)."""
         name = meta["name"]
@@ -1354,6 +1360,10 @@ class Catalog:
                 if c not in keys
             ]
             merged = df.groupBy(*keys).agg(*aggs).select(*df.columns)
+            if meta["strategy"] == "aggregating":
+                merged = merged.select(
+                    *[F.col(f.name).cast(f.dataType) for f in df.schema]
+                )
 
         def refresh(staged: str) -> list[str]:
             merged.write.parquet(os.path.join(staged, name))
@@ -1408,50 +1418,53 @@ class Catalog:
     # --- [EXT] operational DDL: DETACH/ATTACH, BACKUP/RESTORE -------------
 
     def detach(self, name: str, attach: bool) -> None:
-        """[EXT] DETACH/ATTACH TABLE — CH's visibility toggle. DETACH
-        renames the sidecar meta to <name>.json.detached (data
-        untouched, resolution stops finding the table); ATTACH renames
-        it back. Views that reference a detached table fail at read
-        time, exactly like CH."""
-        active = self._meta_path(name)
-        parked = active + ".detached"
+        """[EXT] DETACH/ATTACH TABLE — CH's visibility toggle: DETACH
+        commits the sidecar as <name>.json.detached (data untouched; the
+        table no longer resolves, so views over it fail at read time,
+        like CH), ATTACH commits it back."""
+        src, dst = name + ".json", name + ".json.detached"
         if attach:
-            if os.path.exists(active):
+            src, dst = dst, src
+            if os.path.exists(self._meta_path(name)):
                 raise CatalogError(f"table {name!r} is already attached")
-            if not os.path.exists(parked):
+            if not os.path.exists(os.path.join(self.root, src)):
                 raise CatalogError(f"no detached table {name!r}")
-            os.rename(parked, active)
-            return
-        meta = self._load_meta(name)
-        if meta is None:
-            raise CatalogError(f"unknown table {name!r}")
-        if meta["type"] != "table":
-            raise CatalogError("DETACH supports tables")
-        os.rename(active, parked)
+        elif (self._load_meta(name) or {}).get("type") != "table":
+            raise CatalogError(
+                f"unknown table {name!r} (DETACH supports tables)"
+            )
+
+        def write(staged: str) -> None:
+            _link(os.path.join(self.root, src), os.path.join(staged, dst))
+
+        commit(self.root, [src, dst], write)
 
     def backup(self, name: str, path: str, restore: bool) -> None:
         """[EXT] BACKUP/RESTORE TABLE — copy meta + parquet data
-        to/from a directory. RESTORE refuses to clobber an existing
-        table (drop first); BACKUP replaces its target only when the
-        target is empty or is itself a prior backup (meta.json +
-        data/) — anything else at the path raises instead of being
-        deleted, so a typo'd or reused destination can never wipe
-        unrelated data (ClickHouse's BACKUP likewise refuses to
-        overwrite)."""
-        import shutil
-
+        to/from a directory. RESTORE commits a staged copy of the backup
+        and refuses to clobber an existing table (drop first). BACKUP
+        writes outside the catalog, where no commit reaches: it
+        replaces its target only when the target is empty or is itself
+        a prior backup (meta.json + data/) — anything else at the path
+        raises instead of being deleted (ClickHouse's BACKUP likewise
+        refuses to overwrite)."""
         if restore:
-            if self._load_meta(name) is not None:
+            if self._taken(name):
                 raise CatalogError(
-                    f"table {name!r} already exists — DROP it before "
-                    "RESTORE"
+                    f"table {name!r} already exists — DROP it before RESTORE"
                 )
             src_meta = os.path.join(path, "meta.json")
             src_data = os.path.join(path, "data")
             if not (os.path.exists(src_meta) and os.path.isdir(src_data)):
                 raise CatalogError(f"no backup at {path!r}")
-            shutil.copytree(src_data, self._data_path(name))
-            shutil.copyfile(src_meta, self._meta_path(name))
+            with open(src_meta) as f:
+                meta = {**json.load(f), "name": name}
+
+            def write(staged: str) -> None:
+                shutil.copytree(src_data, os.path.join(staged, name))
+                _dump(os.path.join(staged, name + ".json"), meta)
+
+            commit(self.root, [name, name + ".json"], write)
             return
         meta = self._load_meta(name)
         if meta is None or meta["type"] != "table":
@@ -1473,7 +1486,6 @@ class Catalog:
                     "it; remove it explicitly first"
                 )
             shutil.rmtree(path)
-        os.makedirs(path, exist_ok=True)
         shutil.copytree(self._data_path(name), os.path.join(path, "data"))
         shutil.copyfile(self._meta_path(name), os.path.join(path, "meta.json"))
 
@@ -1695,20 +1707,16 @@ class Catalog:
             )
             self._overwrite(stmt.table, meta, df.filter(~hit), low)
         elif act == "rename_table":
-            new = stmt.payload
-            os.rename(self._meta_path(stmt.table), self._meta_path(new))
-            if os.path.exists(self._data_path(stmt.table)):
-                os.rename(self._data_path(stmt.table), self._data_path(new))
-            meta["name"] = new
-            self._save_meta(new, meta)
-            # dependent views' stored queries still name the old table
-            # — rewrite their TableRefs or every future refresh breaks
-            self._rename_in_views(stmt.table, new)
-            return
+            self.rename({stmt.table: stmt.payload})
         else:
             raise CatalogError(f"unsupported ALTER action {act}")
         if act in ("add_index", "drop_index", "add_constraint", "drop_constraint"):
-            self._save_meta(stmt.table, meta)  # the others committed theirs
+            # the others committed theirs
+            sidecar = stmt.table + ".json"
+            commit(
+                self.root, [sidecar],
+                lambda staged: _dump(os.path.join(staged, sidecar), meta),
+            )
 
     def merge(self, stmt: "A.MergeStmt", low) -> None:
         """[EXT] ANSI MERGE INTO — the warehouse upsert, executed over
@@ -1933,19 +1941,10 @@ class Catalog:
             names=[table, table + ".json"],
         )
 
-    def exchange(self, a: str, b: str, low) -> None:
-        """[EXT] EXCHANGE TABLES a AND b: both tables (and their
-        dependent views' references) swap names — three renames
-        through a temp name, each riding the rename_table path so
-        metadata, data dirs, and view TableRefs all follow."""
-        for n in (a, b):
-            if self._load_meta(n) is None:
-                raise CatalogError(f"unknown table {n!r}")
-        tmp = f"__exchange_{a}__{b}"
-        if self._load_meta(tmp) is not None:
-            raise CatalogError(f"exchange temp name {tmp!r} exists")
-        for old_name, new_name in ((a, tmp), (b, a), (tmp, b)):
-            self.alter(A.AlterStmt(old_name, "rename_table", new_name), low)
+    def exchange(self, a: str, b: str) -> None:
+        """[EXT] EXCHANGE TABLES a AND b: one commit of the rename
+        ``{a: b, b: a}`` (ClickHouse's EXCHANGE is one atomic swap)."""
+        self.rename({a: b, b: a})
 
     def _overwrite(
         self,

@@ -418,7 +418,7 @@ class NutEngine:
             self.catalog.create_table(stmt.definition, low)
             return None
         if isinstance(stmt, A.ExchangeStmt):
-            self.catalog.exchange(stmt.a, stmt.b, low)
+            self.catalog.exchange(stmt.a, stmt.b)
             return None
         if isinstance(stmt, A.DetachStmt):
             self.catalog.detach(stmt.name, stmt.attach)
@@ -427,8 +427,7 @@ class NutEngine:
             self.catalog.backup(stmt.name, stmt.path, stmt.restore)
             return None
         if isinstance(stmt, A.RenameStmt):
-            for old, new in stmt.pairs:
-                self.catalog.alter(A.AlterStmt(old, "rename_table", new), low)
+            self.catalog.rename(stmt.pairs)
             return None
         if isinstance(stmt, A.CreateViewStmt):
             self.catalog.create_view(stmt.definition, low)

@@ -31,7 +31,9 @@ from pyspark.sql import functions as F
 
 from nutdb_spark.catalog import commit
 
-DEFAULT_BUCKETS = 64
+# the bucket count of every catalog view's state: changing it re-hashes
+# keys into buckets that existing state does not have
+DEFAULT_BUCKETS = 16
 
 
 def _bucket_dirs(state_path: str) -> list[str]:

@@ -21,6 +21,7 @@ import pytest
 import nutdb_spark.catalog as cat
 from nutdb_spark.catalog import CatalogError
 from nutdb_spark.engine import NutEngine
+from nutdb_spark.frontend.lower import LoweringError
 
 SF = "/root/testdata/sf0.001"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -37,6 +38,13 @@ FULL_VIEW = (
     "SELECT k, max(v) AS v FROM t GROUP BY k"
 )
 INC_VIEW = "CREATE VIEW iv UPDATE BY Summing ORDER BY (k) AS SELECT k, v FROM t"
+# a second table with its own view, for the statements over two tables
+U = [
+    "CREATE TABLE u (k Int64, v Int64) ORDER BY (k)",
+    "INSERT INTO u VALUES (7, 70)",
+    "CREATE VIEW uv UPDATE BY Summing ORDER BY (k) AS SELECT k, v FROM u",
+]
+U_ROWS = [(7, 70)]
 
 
 class Case:
@@ -157,6 +165,51 @@ CASES = {
         T_IV, ((KV, ROWS),) * 2, ((KV, []),) * 2,
         ("parquet", 1), 2, 2,
     ),
+    # the statements that only re-stage what exists: the table's data
+    # hard-linked under its new name (``link``), each sidecar written
+    # (``dump``). RENAME moves aside t, t.json and the view's sidecar,
+    # and moves in u, u.json and the view's rewritten sidecar.
+    "rename_inc_view": Case(
+        BASE + [INC_VIEW], "RENAME TABLE t TO u",
+        ("t", "u", "iv"), ((KV, ROWS), None, (KV, ROWS)),
+        (None, (KV, ROWS), (KV, ROWS)),
+        [("link", 1), ("dump", 2)], 3, 3,
+    ),
+    # four data directories or sidecars per table, and both views'
+    "exchange_views": Case(
+        BASE + [INC_VIEW] + U, "EXCHANGE TABLES t AND u",
+        ("t", "u", "iv", "uv"),
+        ((KV, ROWS), (KV, U_ROWS), (KV, ROWS), (KV, U_ROWS)),
+        ((KV, U_ROWS), (KV, ROWS), (KV, ROWS), (KV, U_ROWS)),
+        [("link", 2), ("dump", 3)], 6, 6,
+    ),
+    "detach": Case(
+        BASE, "DETACH TABLE t", "t", (KV, ROWS), None, ("link", 1), 1, 1,
+    ),
+    "attach": Case(
+        BASE + ["DETACH TABLE t"], "ATTACH TABLE t",
+        "t", None, (KV, ROWS), ("link", 1), 1, 1,
+    ),
+    # the backup is outside the catalog; commit() makes its staging dir
+    # (makedirs call 1), the copy of the backup's data its own (call 2)
+    "restore": Case(
+        BASE + ["BACKUP TABLE t TO '{root}-bk'"],
+        "RESTORE TABLE r FROM '{root}-bk'",
+        ("t", "r"), ((KV, ROWS), None), ((KV, ROWS), (KV, ROWS)),
+        [("makedirs", 2), ("dump", 1)], 0, 2,
+    ),
+    "replace_view": Case(
+        BASE + [INC_VIEW],
+        "CREATE OR REPLACE VIEW iv UPDATE BY Summing ORDER BY (k) AS "
+        "SELECT k, v * 2 AS v FROM t",
+        "iv", (KV, ROWS), (KV, [(1, 20), (2, 40), (3, 60)]),
+        [("parquet", 1), ("dump", 1)], 2, 2,
+    ),
+    # a sidecar-only ALTER: the rows read the same, the sidecars differ
+    "add_constraint": Case(
+        BASE, "ALTER TABLE t ADD CONSTRAINT pos CHECK v > 0",
+        "t", (KV, ROWS), (KV, ROWS), ("dump", 1), 1, 1,
+    ),
 }
 
 PARAMS = [(name, step) for name, c in CASES.items() for step in c.steps()]
@@ -236,7 +289,7 @@ def test_commit_fault(spark, tmp_path_factory, monkeypatch, name, step):
     if root is None:  # a reused catalog was read back by its last step
         root = eng.catalog.root
         for s in c.setup:
-            eng.sql(s)
+            eng.sql(s.format(root=root))
         assert _read_all(eng, c.objs) == c.before
     if step.startswith("write"):
         target, n = c.writes[int(step[5:] or 0)]
@@ -246,20 +299,24 @@ def test_commit_fault(spark, tmp_path_factory, monkeypatch, name, step):
         target, n = "move", c.asides + 1 + int(step[2:])
     else:
         target, n = "remove", 1
+    sidecars = [eng.catalog._load_meta(o) for o in c.objs]
     fault = _Fault(monkeypatch, target, n)
     committed = step == "drop_asides"
+    stmt = c.stmt.format(root=root)
     if committed:
         # past the commit point a failed delete is left to the sweep
-        eng.sql(c.stmt)
+        eng.sql(stmt)
     else:
         with pytest.raises(type(fault.err), match="simulated"):
-            eng.sql(c.stmt)
+            eng.sql(stmt)
     monkeypatch.undo()
     assert fault.fired
     expected = c.after if committed else c.before
     assert _read_all(eng, c.objs) == expected
     if not committed:
         assert _commit_entries(root) == []
+        # a view's rewritten query and a table's constraints roll back
+        assert [eng.catalog._load_meta(o) for o in c.objs] == sidecars
     fresh = _engine(spark, root)
     assert _read_all(fresh, c.objs) == expected
     assert _commit_entries(root) == []
@@ -310,6 +367,45 @@ def test_killed_commit_rolls_back_on_next_open(spark, tmp_path):
     assert _read(fresh, "t") == (KV, ROWS)
     assert _read(fresh, "u") == (["k"], [(7,)])
     assert _commit_entries(tmp_path) == []
+
+
+def test_killed_exchange_rolls_back_on_next_open(spark, tmp_path):
+    """A process that dies between the move-ins of an EXCHANGE leaves
+    both tables and both views aside or half moved in; the next open
+    gives back each one as it was, its view still over it."""
+    eng = _engine(spark, tmp_path)
+    for s in BASE + [INC_VIEW] + U:
+        eng.sql(s)
+    script = textwrap.dedent(
+        f"""
+        import os, sys
+        sys.path.insert(0, {REPO!r})
+        import nutdb_spark.catalog as cat
+        from nutdb_spark.frontend.parser import parse
+
+        moves = []
+        real = cat._move
+
+        def move(src, dst):
+            moves.append(src)
+            if len(moves) == 9:  # the six asides and two move-ins done
+                os._exit(3)
+            real(src, dst)
+
+        cat._move = move
+        stmt = parse("EXCHANGE TABLES t AND u")
+        cat.Catalog(None, {str(tmp_path)!r}).exchange(stmt.a, stmt.b)
+        """
+    )
+    proc = subprocess.run([sys.executable, "-c", script], timeout=120)
+    assert proc.returncode == 3
+    assert _commit_entries(tmp_path)  # the dead process left its commit
+    fresh = _engine(spark, tmp_path)
+    objs = ("t", "u", "iv", "uv")
+    assert _read_all(fresh, objs) == ((KV, ROWS), (KV, U_ROWS)) * 2
+    assert _commit_entries(tmp_path) == []
+    fresh.sql("INSERT INTO t VALUES (1, 5)")
+    assert _read(fresh, "iv") == (KV, [(1, 15), (2, 20), (3, 30)])
 
 
 class _Plant:
@@ -519,6 +615,88 @@ def test_writing_statement_is_one_commit(spark, tmp_path, monkeypatch, name):
     # one row per key, so each view equals the table's (k, v)
     kv = sorted((r[0], r[1]) for r in eng.sql("SELECT k, v FROM t").collect())
     assert _read(eng, "iv") == _read(eng, "fv") == (KV, kv)
+
+
+# --- the statements that rename or re-create an object --------------------
+
+
+def test_rename_onto_existing_name_raises(spark, tmp_path):
+    eng = _engine(spark, tmp_path)
+    for s in BASE + U:
+        eng.sql(s)
+    for stmt in ("RENAME TABLE t TO u", "ALTER TABLE t RENAME TO uv"):
+        with pytest.raises(CatalogError, match="already exists"):
+            eng.sql(stmt)
+    with pytest.raises(CatalogError, match="twice"):
+        eng.sql("RENAME TABLE t TO w, u TO w")
+    fresh = _engine(spark, tmp_path)
+    assert _read_all(fresh, ("t", "u", "uv")) == (
+        (KV, ROWS), (KV, U_ROWS), (KV, U_ROWS)
+    )
+    assert _read(fresh, "w") is None
+
+
+def test_failed_replace_view_keeps_old_view(spark, tmp_path):
+    eng = _engine(spark, tmp_path)
+    for s in BASE + [INC_VIEW]:
+        eng.sql(s)
+    with pytest.raises(LoweringError, match="unknown table"):
+        eng.sql(
+            "CREATE OR REPLACE VIEW iv UPDATE BY Summing ORDER BY (k) AS "
+            "SELECT k, v FROM nope"
+        )
+    assert _read(eng, "iv") == (KV, ROWS)
+    eng.sql("INSERT INTO t VALUES (1, 5)")
+    assert _read(_engine(spark, tmp_path), "iv") == (
+        KV, [(1, 15), (2, 20), (3, 30)]
+    )
+
+
+def test_exchange_keeps_rows_of_views_over_both_tables(spark, tmp_path):
+    """A view over both tables follows each table's data through the
+    swap, the columns it qualifies with a table's name included."""
+    eng = _engine(spark, tmp_path)
+    for s in BASE + U[:2] + [
+        "INSERT INTO u VALUES (1, 100)",
+        "CREATE VIEW j AS SELECT t.k AS k, t.v AS tv, u.v AS uv "
+        "FROM t JOIN u ON t.k = u.k",
+        "CREATE VIEW tu UPDATE BY Summing ORDER BY (k) AS "
+        "SELECT k, v FROM t UNION ALL SELECT k, v FROM u",
+    ]:
+        eng.sql(s)
+    before = _read_all(eng, ("j", "tu"))
+    assert before[0] == (["k", "tv", "uv"], [(1, 10, 100)])
+    eng.sql("EXCHANGE TABLES t AND u")
+    assert _read(eng, "t") == (KV, [(1, 100), (7, 70)])
+    assert _read_all(eng, ("j", "tu")) == before
+    eng.sql("INSERT INTO u VALUES (2, 5)")  # u holds t's rows now
+    assert _read(_engine(spark, tmp_path), "tu") == (
+        KV, [(1, 110), (2, 25), (3, 30), (7, 70)]
+    )
+
+
+def test_rename_of_several_tables_is_one_commit(spark, tmp_path, monkeypatch):
+    eng = _engine(spark, tmp_path)
+    for s in BASE + [INC_VIEW] + U:
+        eng.sql(s)
+    calls = []
+    real = cat.commit
+
+    def counted(parent, names, write=None):
+        calls.append(names)
+        real(parent, names, write)
+
+    monkeypatch.setattr(cat, "commit", counted)
+    eng.sql("RENAME TABLE t TO t2, u TO u2")
+    monkeypatch.undo()
+    assert len(calls) == 1
+    assert set(calls[0]) >= {"t", "t2", "u", "u2", "iv.json", "uv.json"}
+    assert _read_all(eng, ("t", "u")) == (None, None)
+    assert _read_all(eng, ("t2", "u2", "iv", "uv")) == (
+        (KV, ROWS), (KV, U_ROWS)
+    ) * 2
+    eng.sql("INSERT INTO u2 VALUES (7, 1)")
+    assert _read(eng, "uv") == (KV, [(7, 71)])
 
 
 # --- recover leaves a live commit alone -----------------------------------

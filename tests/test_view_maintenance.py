@@ -324,6 +324,26 @@ def test_aggregating_view_of_distinct_aggregates_is_full(spark, tmp_path):
     assert _rows(eng.sql(query)) == {(1, 2, 11)}
 
 
+def test_full_aggregating_view_keeps_query_types(spark, tmp_path):
+    """A full-refresh Aggregating view merges its rows per key and
+    stores them in its query's own types: the merge's sum of a decimal
+    sum does not widen it."""
+    from nutdb_spark.engine import NutEngine
+
+    eng = NutEngine(
+        spark, data_dir="/root/testdata/sf0.001", catalog_dir=str(tmp_path)
+    )
+    eng.sql("create table f (k Int32, x Decimal64(2)) ORDER BY (k)")
+    query = "select k, sum(x) as sx, avg(x) as ax from f group by k"
+    eng.sql(f"create view fv update by Aggregating order by (k) as {query}")
+    assert eng.catalog._load_meta("fv")["maintenance"] == "full"
+    eng.sql("insert into f (k, x) values (1, 1.25), (1, 0.75), (2, 2.5)")
+    view = eng.sql("select k, sx, ax from fv")
+    assert view.dtypes == eng.sql(query).dtypes
+    assert dict(view.dtypes)["sx"] == "decimal(28,2)"
+    assert _rows(view) == _rows(eng.sql(query))
+
+
 # --- [EXT] plain (non-materialized) views ---------------------------------
 
 
